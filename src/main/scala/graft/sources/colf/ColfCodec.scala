@@ -358,6 +358,36 @@ object ColfCodec {
       val strStarts: Array[Int],
       val strEnds: Array[Int]) {
     def isNullAt(i: Int): Boolean = nulls != null && nulls(i)
+
+    /** The rows at ordinals `rows`, gathered into a dense column: ints,
+      * doubles and the null mask are copied; strings copy only their
+      * start/end offsets and share the blob.
+      */
+    def select(rows: Array[Int]): DecodedColumn = {
+      val n = rows.length
+      def gather(src: Array[Int]): Array[Int] = {
+        val out = new Array[Int](n); var i = 0
+        while (i < n) { out(i) = src(rows(i)); i += 1 }
+        out
+      }
+      val ns =
+        if (nulls == null) null
+        else {
+          val out = new Array[Boolean](n); var i = 0
+          while (i < n) { out(i) = nulls(rows(i)); i += 1 }
+          out
+        }
+      tpe match {
+        case ColfType.Int32 =>
+          new DecodedColumn(tpe, n, ns, gather(ints), null, null, null, null)
+        case ColfType.Float64 =>
+          val out = new Array[Double](n); var i = 0
+          while (i < n) { out(i) = doubles(rows(i)); i += 1 }
+          new DecodedColumn(tpe, n, ns, null, out, null, null, null)
+        case ColfType.Utf8 =>
+          new DecodedColumn(tpe, n, ns, null, null, strBlob, gather(strStarts), gather(strEnds))
+      }
+    }
   }
 
   /** Decode an uncompressed payload. `hasNulls` comes from the column

@@ -234,32 +234,18 @@ private[colf] object ColfUtil {
     * nesting: `dt=2024-01-01/lang=en/part.colf`). Other subdirectories
     * are ignored, as before — only the explicit `k=v` shape opts a path
     * segment into the table schema.
-    */
-  def resolveFileRefs(paths: Seq[String], conf: Configuration): Seq[ColfFileRef] =
-    resolveFileRefs(paths, conf, None)
-
-  /** As above, with snapshot selection: a DIRECTORY that carries
-    * [[ColfVersions]] manifests resolves to one version's exact file
-    * list (`versionAsOf`, default latest) instead of the live listing —
-    * so concurrent commits never change a running scan's file set and
-    * retained old versions stay readable. Directories without manifests
-    * (and explicit file/glob-of-file paths) behave as before;
-    * `versionAsOf` on an unversioned path fails loudly rather than
-    * silently reading the wrong snapshot.
+    *
+    * Snapshot selection: a DIRECTORY that carries [[ColfVersions]]
+    * manifests resolves to one version's exact file list (`versionAsOf`,
+    * default latest) instead of the live listing — so concurrent commits
+    * never change a running scan's file set and retained old versions
+    * stay readable. Directories without manifests (and explicit
+    * file/glob-of-file paths) behave as before; `versionAsOf` on an
+    * unversioned path fails loudly rather than silently reading the
+    * wrong snapshot.
     */
   def resolveFileRefs(paths: Seq[String], conf: Configuration,
-      versionAsOf: Option[Long]): Seq[ColfFileRef] =
-    resolveFileRefs(paths, conf, versionAsOf, None)
-
-  /** The raw directory listing, ignoring any manifests — what the table
-    * holds ON DISK (retained old versions included). Schema-fallback and
-    * maintenance use only.
-    */
-  def listingFileRefs(paths: Seq[String], conf: Configuration): Seq[ColfFileRef] =
-    resolveFileRefs(paths, conf, None, None, ignoreManifests = true)
-
-  def resolveFileRefs(paths: Seq[String], conf: Configuration,
-      versionAsOf: Option[Long], changesSince: Option[Long],
+      versionAsOf: Option[Long] = None, changesSince: Option[Long] = None,
       ignoreManifests: Boolean = false): Seq[ColfFileRef] = {
     def walk(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
         values: Map[String, String]): Seq[ColfFileRef] = {
@@ -331,6 +317,13 @@ private[colf] object ColfUtil {
     }.flatten
   }
 
+  /** The raw directory listing, ignoring any manifests — what the table
+    * holds ON DISK (retained old versions included). Schema-fallback and
+    * maintenance use only.
+    */
+  def listingFileRefs(paths: Seq[String], conf: Configuration): Seq[ColfFileRef] =
+    resolveFileRefs(paths, conf, ignoreManifests = true)
+
   /** The declared table schema ([[ColfVersions.TableMeta]]) governing
     * `paths`, when there is one: a SINGLE directory path, versioned, and
     * a manifest carrying DDL state (at `versionAsOf`, default latest).
@@ -344,20 +337,6 @@ private[colf] object ColfUtil {
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p) || !fs.getFileStatus(p).isDirectory) return None
     ColfVersions.tableMeta(fs, p, versionAsOf)
-  }
-
-  /** Concrete .colf file paths (compat shim over [[resolveFileRefs]]). */
-  def resolveFiles(paths: Seq[String]): Seq[String] =
-    resolveFileRefs(paths, driverHadoopConf()).map(_.path)
-
-  def readHeader(file: String): ColfHeader = readHeader(file, driverHadoopConf())
-
-  def readHeader(file: String, conf: Configuration): ColfHeader = {
-    val path = new Path(file)
-    val fs = path.getFileSystem(conf)
-    val in = fs.open(path)
-    try ColfCodec.readHeader(in)
-    finally in.close()
   }
 
   def sparkType(t: ColfType): DataType = t match {
@@ -408,27 +387,17 @@ private[colf] object ColfUtil {
     val maxBytes: Long =
       try org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
       catch { case _: Throwable => 128L * 1024 * 1024 }
-    // Files carrying a deletion vector pack into their own partitions:
-    // their reader is the row-based skip path, while DV-free files keep
-    // the vectorized ColumnarBatch path — per-partition, because that is
-    // the granularity `supportColumnarReads` decides at. On a healthy
-    // table DVs cover the recently-deleted minority (compaction folds
-    // them), so the hot path stays columnar.
-    val sized = refs.sortBy(-_.size)
+    // Files with and without a deletion vector share bins: the columnar
+    // reader applies a vector per file, as a row selection.
     val bins = scala.collection.mutable.ArrayBuffer
-      .empty[(scala.collection.mutable.ArrayBuffer[ColfFileRef], Long, Boolean)]
-    sized.foreach { r =>
-      val dv = r.dvPath != null
-      bins.indexWhere { case (_, total, hasDv) =>
-        hasDv == dv && total + r.size <= maxBytes } match {
-        case -1 => bins += ((scala.collection.mutable.ArrayBuffer(r), r.size, dv))
-        case i  => val (fs0, total, _) = bins(i); fs0 += r; bins(i) = (fs0, total + r.size, dv)
+      .empty[(scala.collection.mutable.ArrayBuffer[ColfFileRef], Long)]
+    refs.sortBy(-_.size).foreach { r =>
+      bins.indexWhere(_._2 + r.size <= maxBytes) match {
+        case -1 => bins += ((scala.collection.mutable.ArrayBuffer(r), r.size))
+        case i  => val (fs0, total) = bins(i); fs0 += r; bins(i) = (fs0, total + r.size)
       }
     }
-    bins.map { case (fs0, _, hasDv) =>
-      ColfInputPartition(fs0.map(_.path).toSeq, fs0.map(_.partValues).toSeq,
-        if (hasDv) fs0.map(_.dvPath).toSeq else Seq.empty): InputPartition
-    }.toArray
+    bins.map { case (fs0, _) => ColfInputPartition.of(fs0.toSeq): InputPartition }.toArray
   }
 }
 
@@ -1128,28 +1097,30 @@ class ColfScan(paths: Seq[String], fullSchema: StructType, required: StructType,
     * written without stats are always kept.
     */
   private lazy val prunedRefs: Seq[ColfFileRef] =
-    if (filters.isEmpty) absorbedRefs
-    else {
-      // `_file` participates like a partition value (exactly known per
-      // file, zero I/O) when it really is the metadata column — a static
-      // `_file IN (...)` (compaction's group selection) then prunes to
-      // exactly those files, mirroring the runtime-filter path below.
-      val fileIsMeta = !fullSchema.fieldNames.contains(ColfUtil.FileMetaCol)
-      val partKept = absorbedRefs.filter { r =>
-        val vals =
-          if (fileIsMeta) typedPartValues(r) + (ColfUtil.FileMetaCol -> r.path)
-          else typedPartValues(r)
-        vals.isEmpty ||
-          filters.forall(ColfPartitions.mayMatch(vals, _))
-      }
-      statsPrune(partKept, filters)
-    }
+    if (filters.isEmpty) absorbedRefs else pruneFiles(absorbedRefs, filters)
 
-  /** Two-tier (recorded-facts, then real-header) pruning — shared with
-    * the streaming source; see [[ColfPrune.pruneRefs]].
+  /** Keep the files of `base` that may match every filter in `fs`:
+    * partition values first (zero I/O), then the two-tier recorded-facts
+    * and real-header stats pruning shared with the streaming source
+    * ([[ColfPrune.pruneRefs]]).
+    *
+    * `_file` participates like a partition value (exactly known per
+    * file, zero I/O) when it really is the metadata column: a static
+    * `_file IN (...)` (compaction's group selection) or a runtime
+    * `In(_file, ...)` (row-level group filtering) prunes to exactly those
+    * files. A DATA column called `_file` must not be "evaluated" against
+    * file paths (that would prune on garbage).
     */
-  private def statsPrune(base: Seq[ColfFileRef], fs: Seq[Filter]): Seq[ColfFileRef] =
-    ColfPrune.pruneRefs(base, fs, conf)
+  private def pruneFiles(base: Seq[ColfFileRef], fs: Seq[Filter]): Seq[ColfFileRef] = {
+    val fileIsMeta = !fullSchema.fieldNames.contains(ColfUtil.FileMetaCol)
+    val partKept = base.filter { r =>
+      val vals =
+        if (fileIsMeta) typedPartValues(r) + (ColfUtil.FileMetaCol -> r.path)
+        else typedPartValues(r)
+      fs.forall(ColfPartitions.mayMatch(vals, _))
+    }
+    ColfPrune.pruneRefs(partKept, fs, conf)
+  }
 
   private def typedPartValues(r: ColfFileRef): Map[String, Any] =
     ColfUtil.typedPartValues(r, fullSchema)
@@ -1240,24 +1211,7 @@ class ColfScan(paths: Seq[String], fullSchema: StructType, required: StructType,
     * headers).
     */
   private def applyRuntimeFilters(base: Seq[ColfFileRef]): Seq[ColfFileRef] =
-    if (runtimeFilters.isEmpty) base
-    else {
-      val fs = runtimeFilters.toSeq
-      // `_file` joins the exactly-evaluable values (row-level group
-      // filters arrive as In(_file, ...)): a file survives iff its own
-      // path may match — exact file selection, zero I/O. Only when the
-      // name really is the metadata column: a DATA column called _file
-      // must not be "evaluated" against file paths (that would prune on
-      // garbage).
-      val fileIsMeta = !fullSchema.fieldNames.contains(ColfUtil.FileMetaCol)
-      val partKept = base.filter { r =>
-        val vals =
-          if (fileIsMeta) typedPartValues(r) + (ColfUtil.FileMetaCol -> r.path)
-          else typedPartValues(r)
-        fs.forall(ColfPartitions.mayMatch(vals, _))
-      }
-      statsPrune(partKept, fs)
-    }
+    if (runtimeFilters.isEmpty) base else pruneFiles(base, runtimeFilters.toSeq)
 
   protected def plannedRefs: Seq[ColfFileRef] = applyRuntimeFilters(refs)
 
@@ -1311,9 +1265,7 @@ class ColfScan(paths: Seq[String], fullSchema: StructType, required: StructType,
           "the colf_diff table function")
     if (spjActive) {
       spjGroups.map { case (key, refs) =>
-        val inner = ColfInputPartition(refs.map(_.path),
-          refs.map(_.partValues),
-          if (refs.exists(_.dvPath != null)) refs.map(_.dvPath) else Seq.empty)
+        val inner = ColfInputPartition.of(refs)
         val vals = key.map {
           case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
           case v         => v
@@ -1356,8 +1308,7 @@ class ColfScan(paths: Seq[String], fullSchema: StructType, required: StructType,
       // CSV-converted inputs) must win over the metadata value — the
       // table also stops advertising the metadata column in that case
       fileMetaEnabled = !fullSchema.fieldNames.contains(ColfUtil.FileMetaCol),
-      posMetaEnabled = !fullSchema.fieldNames.contains(ColfUtil.PosMetaCol),
-      allowColumnar = !plannedRefs.exists(_.dvPath != null))
+      posMetaEnabled = !fullSchema.fieldNames.contains(ColfUtil.PosMetaCol))
 
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     Array(new ColfFilesListedMetric, new ColfFilesPlannedMetric)
@@ -1494,18 +1445,27 @@ case class ColfInputPartition(files: Seq[String],
   /** Raw `k=v` values for file i (empty when the layout is flat). */
   def valuesFor(i: Int): Map[String, String] =
     if (partValues.isEmpty) Map.empty else partValues(i)
-  /** Deletion-vector path for file i, or null (empty = whole partition
-    * DV-free — the planner packs DV files separately).
+  /** Deletion-vector path for file i, or null (empty = no file of the
+    * partition carries one). The reader emits the file's rows minus the
+    * vector's ordinals.
     */
   def dvFor(i: Int): String = if (dvs.isEmpty) null else dvs(i)
   /** Change-feed retraction partitions ([[ColfChangeFeedStream]]):
     * `emitOnlyDeleted` INVERTS the deletion-vector semantics — the
     * reader emits EXACTLY the ordinals of `dvs(i)` minus `priorDvs(i)`
     * (the rows newly masked by one commit's vector growth), instead of
-    * the surviving rows. Row path only.
+    * the surviving rows.
     */
   def priorDvFor(i: Int): String = if (priorDvs.isEmpty) null else priorDvs(i)
-  def hasDvs: Boolean = dvs.exists(_ != null)
+}
+
+object ColfInputPartition {
+  /** One scan partition over `refs`, in order; `dvs` stays empty when no
+    * file carries a deletion vector.
+    */
+  def of(refs: Seq[ColfFileRef]): ColfInputPartition =
+    ColfInputPartition(refs.map(_.path), refs.map(_.partValues),
+      if (refs.exists(_.dvPath != null)) refs.map(_.dvPath) else Seq.empty)
 }
 
 /** Storage-partitioned-join partition: one hive partition-value tuple's
@@ -1522,29 +1482,24 @@ case class ColfSpjInputPartition(inner: ColfInputPartition,
 
 class ColfPartitionReaderFactory(required: StructType, missingAsNull: Boolean = false,
     conf: SerializableConfiguration = new SerializableConfiguration(new Configuration()),
-    fileMetaEnabled: Boolean = true, posMetaEnabled: Boolean = true,
-    allowColumnar: Boolean = true)
+    fileMetaEnabled: Boolean = true, posMetaEnabled: Boolean = true)
     extends PartitionReaderFactory {
   private def unwrap(partition: InputPartition): ColfInputPartition = partition match {
     case s: ColfSpjInputPartition => s.inner
     case p                        => p.asInstanceOf[ColfInputPartition]
   }
-  override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
-    new ColfPartitionReader(unwrap(partition), required,
-      missingAsNull, conf, fileMetaEnabled, posMetaEnabled)
 
-  /** Columnar read path: each file decodes to per-column arrays anyway, so
-    * exposing them as one zero-copy ColumnarBatch per file lets Spark's
+  /** Every colf read is columnar: each file decodes to per-column arrays
+    * anyway, so exposing them as one ColumnarBatch per file lets Spark's
     * codegen'd ColumnarToRow produce rows — no per-row GenericInternalRow
     * allocation, no boxing, and the scan participates in whole-stage
-    * codegen. A scan whose plan includes ANY deletion-vector file answers
-    * false FOR EVERY partition (Spark refuses mixed row/columnar scans):
-    * masking ordinals inside a zero-copy batch would need a selection
-    * vector the DSv2 batch contract doesn't carry, so the whole scan
-    * takes the row path until compaction folds the vectors.
+    * codegen. Deletion vectors and change-feed retractions become a
+    * per-file row selection inside [[ColfColumnarReader]].
     */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    allowColumnar
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
+    throw new UnsupportedOperationException("colf partitions are read columnar only")
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new ColfColumnarReader(unwrap(partition), required,
@@ -1663,104 +1618,6 @@ private[colf] class ColfFileDecoder(file: String, required: StructType,
   def close(): Unit = in.close()
 }
 
-/** Row-based read path — also the DELETION-VECTOR path: a file whose
-  * manifest entry references a DV ([[ColfDeletes]]) is read here with the
-  * masked ordinals skipped (the columnar path serves DV-free partitions;
-  * the planner packs the two kinds separately). Streams the partition's
-  * files sequentially, preserving file order; partition-path columns
-  * materialize as per-file constants; `_pos` emits the row's ORIGINAL
-  * file ordinal — deletes never renumber survivors.
-  */
-class ColfPartitionReader(part: ColfInputPartition, required: StructType,
-    missingAsNull: Boolean = false,
-    conf: SerializableConfiguration = new SerializableConfiguration(new Configuration()),
-    fileMetaEnabled: Boolean = true, posMetaEnabled: Boolean = true)
-    extends PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.unsafe.types.UTF8String
-
-  private val files = part.files
-  private var fileIdx = -1
-  private var dec: ColfFileDecoder = null
-  private var plan: ColfFilePlan = null
-  private var constants: Array[Any] = null
-  private var row = -1
-  // current file's sorted deleted ordinals (null = none) + skip cursor;
-  // rows stream in ordinal order, so one forward pointer applies the
-  // whole vector in O(rows + deletes)
-  private var dv: Array[Long] = null
-  private var dvPtr = 0
-
-  override def next(): Boolean = {
-    row += 1
-    while (true) {
-      if (dec == null || row >= dec.numRows) {
-        if (dec != null) { dec.close(); dec = null }
-        fileIdx += 1
-        if (fileIdx >= files.length) return false
-        plan = new ColfFilePlan(required, part.valuesFor(fileIdx), files(fileIdx),
-          fileMetaEnabled, posMetaEnabled)
-        constants = plan.emit.map {
-          case Right(ColfFilePlan.Pos) => null: Any // per-row, not constant
-          case Right(v: String)        => UTF8String.fromString(v): Any
-          case Right(v)                => v
-          case Left(_)                 => null
-        }.toArray
-        dec = new ColfFileDecoder(files(fileIdx), plan.dataRequired, missingAsNull, conf.value)
-        row = 0
-        def load(p: String): Array[Long] = {
-          val path = new Path(p)
-          ColfDeletes.readFile(path.getFileSystem(conf.value), path)
-        }
-        dv =
-          if (part.emitOnlyDeleted) {
-            // retraction mode: the emit list is the NEW vector minus the
-            // prior one — exactly the rows one commit newly deleted
-            val newD = load(part.dvFor(fileIdx))
-            val oldD = Option(part.priorDvFor(fileIdx)).map(load)
-              .getOrElse(Array.empty[Long])
-            ColfDeletes.diffSorted(newD, oldD)
-          } else Option(part.dvFor(fileIdx)).map(load).orNull
-        dvPtr = 0
-      } else if (part.emitOnlyDeleted) {
-        if (dv == null || dvPtr >= dv.length) row = dec.numRows // exhausted → next file
-        else { row = dv(dvPtr).toInt; dvPtr += 1; return true }
-      } else if (dv != null && dvPtr < dv.length && dv(dvPtr) == row) {
-        dvPtr += 1
-        row += 1
-      } else return true
-    }
-    false // unreachable
-  }
-
-  override def get(): InternalRow = {
-    val cols = dec.cols
-    val values = new Array[Any](plan.emit.length)
-    var c = 0
-    while (c < plan.emit.length) {
-      values(c) = plan.emit(c) match {
-        case Right(ColfFilePlan.Pos) => row.toLong
-        case Right(_) => constants(c)
-        case Left(d) =>
-          val col = cols(d)
-          if (col.isNullAt(row)) null
-          else col.tpe match {
-            case ColfType.Int32   => col.ints(row)
-            case ColfType.Float64 => col.doubles(row)
-            case ColfType.Utf8 =>
-              UTF8String.fromBytes(col.strBlob, col.strStarts(row),
-                col.strEnds(row) - col.strStarts(row))
-          }
-      }
-      c += 1
-    }
-    new GenericInternalRow(values)
-  }
-
-  override def close(): Unit = if (dec != null) dec.close()
-}
-
 /** Zero-copy vector view over a decoded COLF column: getters index the
   * decoded primitive arrays directly; strings wrap (blob, start, end)
   * slices without copying.
@@ -1827,8 +1684,8 @@ private[colf] class ColfConstantVector(dt: org.apache.spark.sql.types.DataType, 
     new UnsupportedOperationException(s"COLF constant vector has no $t accessor")
 }
 
-/** `_pos` metadata vector for the columnar path: a batch spans exactly
-  * one file, so the row's file ordinal IS its batch index — no backing
+/** `_pos` metadata vector: a batch spans exactly one file, so for a file
+  * read whole the row's file ordinal IS its batch index — no backing
   * array, no allocation.
   */
 private[colf] class ColfPositionVector
@@ -1854,8 +1711,20 @@ private[colf] class ColfPositionVector
     new UnsupportedOperationException(s"COLF position vector has no $t accessor")
 }
 
-/** Columnar read: one zero-copy batch per file, files in order;
-  * partition-path columns ride as constant vectors.
+/** `_pos` of a file read through a row selection: batch row i is file
+  * row `rows(i)` — deletes never renumber survivors.
+  */
+private[colf] final class ColfSelectedPositionVector(rows: Array[Int]) extends ColfPositionVector {
+  override def getLong(i: Int): Long = rows(i).toLong
+}
+
+/** The COLF read: one batch per file, files in order; partition-path
+  * columns ride as constant vectors. A file without a deletion vector
+  * is served zero-copy from its decoded arrays. A file with one, or a
+  * change-feed retraction ([[ColfInputPartition.emitOnlyDeleted]]), is
+  * read through a row selection: each decoded column is gathered once
+  * to the selected ordinals, and a file left with no selected row
+  * emits no batch.
   */
 class ColfColumnarReader(part: ColfInputPartition, required: StructType,
     missingAsNull: Boolean = false,
@@ -1870,22 +1739,62 @@ class ColfColumnarReader(part: ColfInputPartition, required: StructType,
   private var batch: ColumnarBatch = null
 
   override def next(): Boolean = {
-    if (dec != null) { batch.close(); dec.close(); dec = null; batch = null }
-    fileIdx += 1
-    if (fileIdx >= files.length) return false
-    val plan = new ColfFilePlan(required, part.valuesFor(fileIdx), files(fileIdx),
-      fileMetaEnabled, posMetaEnabled)
-    dec = new ColfFileDecoder(files(fileIdx), plan.dataRequired, missingAsNull, conf.value)
-    val vectors = plan.emit.zipWithIndex.map {
-      case (Left(d), _)  => new ColfColumnVector(dec.cols(d)): ColumnVector
-      // one batch spans one whole file, so `_pos` is the batch index
-      case (Right(ColfFilePlan.Pos), _) => new ColfPositionVector: ColumnVector
-      case (Right(v), i) => new ColfConstantVector(required.fields(i).dataType, v): ColumnVector
+    close()
+    while (batch == null) {
+      fileIdx += 1
+      if (fileIdx >= files.length) return false
+      val file = files(fileIdx)
+      val plan = new ColfFilePlan(required, part.valuesFor(fileIdx), file,
+        fileMetaEnabled, posMetaEnabled)
+      dec = new ColfFileDecoder(file, plan.dataRequired, missingAsNull, conf.value)
+      val rows = selection(file, dec.numRows)
+      if (rows != null && rows.isEmpty) close()
+      else {
+        val vectors = plan.emit.zipWithIndex.map {
+          case (Left(d), _) =>
+            new ColfColumnVector(if (rows == null) dec.cols(d) else dec.cols(d).select(rows)): ColumnVector
+          case (Right(ColfFilePlan.Pos), _) =>
+            if (rows == null) new ColfPositionVector else new ColfSelectedPositionVector(rows)
+          case (Right(v), i) => new ColfConstantVector(required.fields(i).dataType, v): ColumnVector
+        }
+        batch = new ColumnarBatch(vectors.toArray, if (rows == null) dec.numRows else rows.length)
+      }
     }
-    batch = new ColumnarBatch(vectors.toArray, dec.numRows)
     true
   }
 
+  /** Ascending ordinals of `file` to emit, or null for every row: the
+    * complement of the file's deletion vector, or under `emitOnlyDeleted`
+    * the vector minus the prior one (the rows one commit newly deleted).
+    */
+  private def selection(file: String, numRows: Int): Array[Int] = {
+    val dv = part.dvFor(fileIdx)
+    if (part.emitOnlyDeleted)
+      ColfDeletes.diffSorted(deleted(file, dv, numRows),
+        deleted(file, part.priorDvFor(fileIdx), numRows)).map(_.toInt)
+    else if (dv == null) null
+    else ColfDeletes.complement(deleted(file, dv, numRows), numRows)
+  }
+
+  /** The ordinals vector `dv` deletes from `file` (none for null). A
+    * vector is read from disk, so every ordinal is checked against the
+    * file before it can index a decoded column.
+    */
+  private def deleted(file: String, dv: String, numRows: Int): Array[Long] =
+    if (dv == null) Array.empty[Long]
+    else {
+      val path = new Path(dv)
+      val ords = ColfDeletes.readFile(path.getFileSystem(conf.value), path)
+      ords.find(o => o < 0 || o >= numRows).foreach { o =>
+        throw new java.io.IOException(
+          s"colf: deletion vector $dv deletes row $o of $file, which has $numRows rows")
+      }
+      ords
+    }
+
   override def get(): ColumnarBatch = batch
-  override def close(): Unit = if (dec != null) { batch.close(); dec.close() }
+  override def close(): Unit = {
+    if (batch != null) { batch.close(); batch = null }
+    if (dec != null) { dec.close(); dec = null }
+  }
 }

@@ -38,7 +38,7 @@ private[graft] object ColfDeletes {
 
   /** Serialize sorted distinct `positions` (caller guarantees order and
     * uniqueness — enforced here, fail-loudly, because a DV that lies
-    * about order would silently corrupt the skip loop in the reader).
+    * about order would silently corrupt the reader's row selection).
     */
   private def render(positions: Array[Long]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(Magic.length + positions.length * 2 + 8)
@@ -127,7 +127,9 @@ private[graft] object ColfDeletes {
     var prev = -1L
     var i = 0
     while (i < count) {
-      prev += readVarint()
+      val gap = readVarint()
+      require(gap > 0 && prev + gap > prev, "positions not strictly ascending")
+      prev += gap
       out(i) = prev
       i += 1
     }
@@ -166,6 +168,20 @@ private[graft] object ColfDeletes {
       i += 1
     }
     if (k == out.length) out else java.util.Arrays.copyOf(out, k)
+  }
+
+  /** The ordinals in `[0, numRows)` that sorted distinct `deleted` does
+    * not hold: the rows a scan of a DV'd file emits.
+    */
+  def complement(deleted: Array[Long], numRows: Int): Array[Int] = {
+    val out = new Array[Int](numRows - deleted.length)
+    var d = 0; var k = 0; var r = 0
+    while (r < numRows) {
+      if (d < deleted.length && deleted(d) == r) d += 1
+      else { out(k) = r; k += 1 }
+      r += 1
+    }
+    out
   }
 
   /** DV files currently on disk (empty when the directory is absent) —

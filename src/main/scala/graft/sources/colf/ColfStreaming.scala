@@ -251,7 +251,8 @@ object ColfCdfOffset {
   *  - removed files → their previously-live rows as deletes (the PRIOR
   *    version's DV applied: rows already deleted are not re-retracted);
   *  - same-path entries whose DV GREW → exactly the newly-masked
-  *    ordinals as deletes ([[ColfInputPartition.emitOnlyDeleted]]);
+  *    ordinals as deletes: the reader's row selection is the new vector
+  *    minus the prior one ([[ColfInputPartition.emitOnlyDeleted]]);
   *  - same-path entries whose bytes changed (size/mtime — an epoch
   *    replay's idempotent rewrite) → old rows deleted, new inserted.
   *
@@ -389,8 +390,7 @@ class ColfChangeFeedStream(path: String, required: StructType,
     new ColfPartitionReaderFactory(required, missingAsNull = true,
       new SerializableConfiguration(conf),
       fileMetaEnabled = !required.fieldNames.contains(ColfUtil.FileMetaCol),
-      posMetaEnabled = !required.fieldNames.contains(ColfUtil.PosMetaCol),
-      allowColumnar = false) // retraction partitions need the row path
+      posMetaEnabled = !required.fieldNames.contains(ColfUtil.PosMetaCol))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{concat, lit, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.colf.{ColfDeletes, ColfMaintenance, ColfVersions}
@@ -12,8 +13,9 @@ import graft.sources.colf.{ColfDeletes, ColfMaintenance, ColfVersions}
   *
   *  1. leave every data file BYTEWISE untouched (same names, same
   *     mtimes) — the write-amplification fix the mode exists for;
-  *  2. read back exactly the relational result, on the row path (DV'd
-  *     files) and columnar path (clean files) alike;
+  *  2. read back exactly the relational result through the one
+  *     columnar reader: DV'd files as a row selection, clean files
+  *     zero-copy;
   *  3. keep every earlier snapshot time-travelable (old versions read
   *     the old vectors, or none);
   *  4. compose: a second delete against the same file merges vectors;
@@ -76,6 +78,32 @@ class ColfDeleteVectorSpec extends AnyFunSuite {
     intercept[java.io.IOException] {
       ColfDeletes.read(fs, root, "_graft_deletes/bad.gdv")
     }
+    // a zero gap (position 3 twice) is refused when the vector is read
+    val dup = new org.apache.hadoop.fs.Path(root, "_graft_deletes/dup.gdv")
+    val dout = fs.create(dup, true)
+    dout.write("GDV1".getBytes ++ Array[Byte](2, 4, 0)); dout.close()
+    intercept[java.io.IOException] {
+      ColfDeletes.read(fs, root, "_graft_deletes/dup.gdv")
+    }
+  }
+
+  test("a deletion vector naming a row beyond its data file fails the scan") {
+    val dir = tmp()
+    spark.range(0, 10).select($"id".cast("int").as("k")).coalesce(1)
+      .write.format("colf").option("manifest", "true").mode("append").save(dir)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    // ordinal 10 of a 10-row file: written by hand, as a corrupt or
+    // foreign writer could
+    val dv = ColfDeletes.write(fs, root, Array(3L, 10L))
+    ColfVersions.append(fs, root, basis => basis.get._2.map(_.copy(dv = dv, dvRows = 2L)))
+    val e = intercept[Exception](spark.read.format("colf").load(dir).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    val dataFile = ColfVersions.latest(fs, root).get._2.head.relPath
+    assert(msgs.contains(new org.apache.hadoop.fs.Path(dv).getName) &&
+      msgs.contains(new org.apache.hadoop.fs.Path(dataFile).getName) &&
+      msgs.contains("row 10"), msgs)
   }
 
   test("merge-on-read DELETE: data files bytewise untouched, vectors merge, snapshots hold") {
@@ -204,9 +232,13 @@ class ColfDeleteVectorSpec extends AnyFunSuite {
       .select($"k", $"_pos").collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(posBefore(7) == 7L && posBefore.size == 50)
     withMoR { spark.sql(s"DELETE FROM colf_dv.`$dir` WHERE k = 7") }
+    assert(dvEntries(dir).nonEmpty)
     // survivors keep their ORIGINAL ordinals (deletes never renumber)
-    val posAfter = spark.read.format("colf").load(dir)
-      .select($"k", $"_pos").collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val after = spark.read.format("colf").load(dir).select($"k", $"_pos")
+    // the DV'd file is read by the columnar reader too
+    val plan = after.queryExecution.executedPlan.toString
+    assert(plan.contains("ColumnarToRow"), plan)
+    val posAfter = after.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(posAfter.size == 49 && !posAfter.contains(7))
     assert(posAfter(8) == 8L && posAfter(49) == 49L)
   }
@@ -214,15 +246,30 @@ class ColfDeleteVectorSpec extends AnyFunSuite {
   test("compaction folds deletion vectors into clean files") {
     registerCatalog()
     val dir = tmp()
+    // s: a nullable string, so the reader's row selection gathers string
+    // offsets and null masks as well as numbers
     spark.range(0, 400)
       .select($"id".cast("int").as("k"), ($"id" % 4).cast("int").as("p"),
-        ($"id" * 1.5).as("v"))
+        ($"id" * 1.5).as("v"),
+        when($"id" % 5 =!= 0, concat(lit("s"), $"id".cast("string"))).as("s"))
       .repartition(1).write.format("colf").option("partitionBy", "p")
       .option("manifest", "true").mode("append").save(dir)
     withMoR {
       spark.sql(s"DELETE FROM colf_dv.`$dir` WHERE k IN (1, 2, 3, 101, 102, 201)")
     }
-    assert(dvEntries(dir).nonEmpty)
+    // p=0 stays clean; its file shares a scan partition with DV'd ones
+    assert(dvEntries(dir).size == 3)
+    def checkRows(): Unit = {
+      val rows = spark.read.format("colf").load(dir).select($"k", $"v", $"s").collect()
+      assert(rows.map(_.getInt(0)).sorted.toSeq ==
+        (0 until 400).filterNot(Set(1, 2, 3, 101, 102, 201)))
+      rows.foreach { r =>
+        val k = r.getInt(0)
+        assert(r.getDouble(1) == k * 1.5 && r.getString(2) == (if (k % 5 == 0) null else s"s$k"),
+          s"row $r")
+      }
+    }
+    checkRows()
     // while vectors exist, header-only aggregation must DECLINE (headers
     // still count masked rows) — the count comes from the real scan
     val dvPlan = spark.sql(s"SELECT count(*) AS c FROM colf_dv.`$dir`")
@@ -234,6 +281,7 @@ class ColfDeleteVectorSpec extends AnyFunSuite {
     ColfMaintenance.compact(spark, dir)
     // vectors folded: no entry carries one, rows exact, deleted rows gone
     assert(dvEntries(dir).isEmpty, "compaction must fold every deletion vector")
+    checkRows()
     val t = spark.read.format("colf").load(dir)
     assert(t.count() == 394)
     assert(t.where($"k".isin(1, 2, 3, 101, 102, 201)).count() == 0)

@@ -178,7 +178,7 @@ object SparkEntry {
     * (r21, VERDICT r20 #1): the r20 fixed `p × 2` width oversubscribed
     * tiny corpora — the driver board read q_fuzzy_join_fastss at 2.85 s
     * on 32 cores vs 0.82 s on 8 (64 tasks over ~1500 customer rows; the
-    * per-task dispatch swamped the fan-out win). Now ~32 KB of scan
+    * per-task dispatch swamped the fan-out win). Now ~8 KB of scan
     * bytes buy one task, capped at cluster default parallelism — small
     * corpora get a handful of tasks, big ones saturate the cluster —
     * and a scan big enough to split itself to ≥ p tasks
@@ -233,26 +233,20 @@ object SparkEntry {
       |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
       |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)""".stripMargin
 
-  /** Order-insensitive exact sum of a 2-dp double, surfaced as double.
-    * LONG limb form (r21 sweep, VERDICT r20 #2): `sum(decimal(14,2))`
-    * buffers at decimal(24,2) — precision > 18, a BigDecimal
-    * deserialize/add/reserialize per row (the r18 intermittent-10× CPU
-    * class); the limb sum is codegen'd long arithmetic per row with one
-    * BigDecimal per group, bit-identical to `cast(sum(dec) AS double)`
-    * (GridSum12Spec). Single-level: Σlo is ANSI-loud past 2³² rows in
-    * ONE group — per-key aggregations stay far under that; q1_agg's six
-    * global groups use the two-level form instead.
+  /** Order-insensitive exact sum of a 2-dp double, surfaced as double:
+    * bit-identical to `cast(sum(decimal(14,2)) AS double)` (GridSum12Spec)
+    * with long arithmetic per row instead of a decimal(24,2) BigDecimal
+    * buffer. [[operators.GridSum.exactSum]] has no row-count bound.
     */
   private def dsum2(c: Column): Column =
-    operators.GridSum.sumUnscaledAsDouble(operators.GridSum.unscaled(dec2(c)), 2)
+    operators.GridSum.exactSum(operators.GridSum.unscaled(dec2(c)), 2).cast("double")
 
   /** [[dsum2]] at the events table's 6-dp grid: exact sum of
-    * `value.cast(decimal(18,6))`, surfaced as double — the same limb
-    * rewrite for the other repeated sum shape of the query set.
+    * `value.cast(decimal(18,6))`, surfaced as double.
     */
   private def dsum6(c: Column): Column =
-    operators.GridSum.sumUnscaledAsDouble(
-      operators.GridSum.unscaled(c.cast("decimal(18,6)")), 6)
+    operators.GridSum.exactSum(
+      operators.GridSum.unscaled(c.cast("decimal(18,6)")), 6).cast("double")
 
   /** Shared by q_video_containment, q_audio_containment and
     * q_text_containment: all three planted corpora follow the same
@@ -351,50 +345,30 @@ object SparkEntry {
   // ------------------------------------------------------- relational core
 
   private def q1Agg(s: SparkSession, dir: String): DataFrame = {
-    // Exact decimal sums in LONG limb form (r20 optimization, guide §4:
-    // per-row expression cost). The straight decimal form summed
-    // decimal(24,2)/(33,4)/(42,6) buffers — precision > 18, so every row
-    // deserialized, added and reserialized a BigDecimal in the aggregate
-    // buffer, and the two products were BigDecimal multiplies; measured
-    // 0.94 s vs 0.64 s for this form at sf0.1 (single-row-group scan).
-    // Here every per-row op is a codegen'd long: UnscaledValue of the
-    // long-backed decimal(14,2)/(8,2) casts, long multiplies for the
-    // exact products (unscaled(a·b) = unscaled(a)·unscaled(b)), 31-bit
-    // limb sums. TWO-LEVEL (per-partition partials combined in decimal,
-    // GridSum.combine): the six global groups exceed 2³² rows at 100 TB,
-    // where the single-level Σlo would be ANSI-loud. The final doubles
-    // are bit-identical (BigDecimal(U, scale).doubleValue is the exact
-    // path cast(sum(decimal) AS double) took) — oracle hash unchanged.
-    import operators.GridSum
+    // Exact decimal sums over codegen'd longs (r20 optimization, guide §4:
+    // the straight decimal(24,2)/(33,4)/(42,6) buffers cost a BigDecimal
+    // per row, 0.94 s vs 0.64 s at sf0.1): UnscaledValue of the
+    // long-backed casts, long multiplies for the exact products, one
+    // GridSum.exactSum per metric; no row-count bound per group.
+    import operators.GridSum.{exactSum, unscaled}
     val oneMinusDisc = expr("CAST(1.0 - l_discount AS DECIMAL(8,2))")
     val onePlusTax = expr("CAST(1.0 + l_tax AS DECIMAL(8,2))")
-    val uQty = GridSum.unscaled(dec2(col("l_quantity")))                  // scale 2
-    val uPrice = GridSum.unscaled(dec2(col("l_extendedprice")))           // scale 2
-    val uDisc = uPrice * GridSum.unscaled(oneMinusDisc)                   // scale 4
-    val uCharge = uDisc * GridSum.unscaled(onePlusTax)                    // scale 6
-    def limbs(u: Column, n: String): Seq[(Column, String)] =
-      Seq(GridSum.hi(u) -> s"${n}_hi", GridSum.lo(u) -> s"${n}_lo")
-    val metrics = limbs(col("uq"), "q") ++ limbs(col("up"), "p") ++
-      limbs(col("ud"), "d") ++ limbs(col("uc"), "c")
-    val partialAggs = metrics.map { case (c, n) => sum(c).as(n) } :+
-      count(lit(1)).as("cnt")
-    val partial = t(s, dir, "lineitem")
-      .select(col("l_returnflag"), col("l_linestatus"),
-        uQty.as("uq"), uPrice.as("up"), uDisc.as("ud"), uCharge.as("uc"))
-      .withColumn("__pid", spark_partition_id())
-      .groupBy(col("l_returnflag"), col("l_linestatus"), col("__pid"))
-      .agg(partialAggs.head, partialAggs.tail: _*)
-    def tot(n: String, scale: Int): Column =
-      GridSum.totalAsDouble(col(s"${n}_hi"), col(s"${n}_lo"), scale)
-    partial
+    val uQty = unscaled(dec2(col("l_quantity")))                  // scale 2
+    val uPrice = unscaled(dec2(col("l_extendedprice")))           // scale 2
+    // long multiplies: ANSI-loud once |price·(1−disc)| ≥ 9.2e14 (2⁶³/10⁴)
+    // or |price·(1−disc)·(1+tax)| ≥ 9.2e12 (2⁶³/10⁶)
+    val uDisc = uPrice * unscaled(oneMinusDisc)                   // scale 4
+    val uCharge = uDisc * unscaled(onePlusTax)                    // scale 6
+    val sumQty = exactSum(uQty, 2).cast("double")
+    t(s, dir, "lineitem")
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
-        tot("q", 2).as("sum_qty"),
-        tot("p", 2).as("sum_base_price"),
-        tot("d", 4).as("sum_disc_price"),
-        tot("c", 6).as("sum_charge"),
-        sum(col("cnt")).as("count_order"),
-        (tot("q", 2) / sum(col("cnt"))).as("avg_qty"),
+        sumQty.as("sum_qty"),
+        exactSum(uPrice, 2).cast("double").as("sum_base_price"),
+        exactSum(uDisc, 4).cast("double").as("sum_disc_price"),
+        exactSum(uCharge, 6).cast("double").as("sum_charge"),
+        count(lit(1)).as("count_order"),
+        (sumQty / count(lit(1))).as("avg_qty"),
       )
   }
 
@@ -435,13 +409,13 @@ object SparkEntry {
         .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_items"),
-          // exact discounted revenue as a long-limb sum of the UNSCALED
-          // product (q1_agg's idiom, r21 sweep): unscaled(a·b) =
-          // unscaled(a)·unscaled(b) at scale 4, no per-row BigDecimal
-          operators.GridSum.sumUnscaledAsDouble(
+          // exact discounted revenue: the UNSCALED product at scale 4
+          // (q1_agg's idiom), no per-row BigDecimal. The long multiply is
+          // ANSI-loud once |price·(1−disc)| ≥ 9.2e14 (2⁶³/10⁴)
+          operators.GridSum.exactSum(
             operators.GridSum.unscaled(dec2(col("l_extendedprice"))) *
               operators.GridSum.unscaled(expr("CAST(1.0 - l_discount AS DECIMAL(8,2))")),
-            4).as("revenue"))),
+            4).cast("double").as("revenue"))),
 
     "q_filter_pushdown" -> ((s, dir) =>
       t(s, dir, "lineitem")
@@ -685,11 +659,11 @@ object SparkEntry {
       val base = pur.groupBy(col("user_id"))
         .agg(max(unix_micros(col("ts"))).as("last_us"),
           count(lit(1)).as("frequency"),
-          // exact 6-dp monetary total in limb form, result type and value
-          // identical to sum(decimal(18,6)) (r21 sweep)
-          operators.GridSum.sumUnscaledAsDecimal(
+          // exact 6-dp monetary total, result type and value identical
+          // to sum(decimal(18,6)) (r21 sweep)
+          operators.GridSum.exactSum(
             operators.GridSum.unscaled(col("value").cast("decimal(18,6)")),
-            6, "decimal(28,6)").as("mon_d"))
+            6).cast("decimal(28,6)").as("mon_d"))
         .crossJoin(broadcast(anchor))
         .select(col("user_id"),
           expr("(mx - last_us) div 86400000000").as("recency_days"),
@@ -2955,11 +2929,11 @@ object SparkEntry {
         .select(col("event_type"), expr("tus div 86400000000").as("day"), col("value"))
         .groupBy("event_type", "day")
         .agg(count(lit(1)).as("n"),
-          // limb form of sum(decimal(18,6)) — the window re-sums over
-          // s below run over ≤7 day-rows per frame, not corpus rows
-          operators.GridSum.sumUnscaledAsDecimal(
+          // exact sum(decimal(18,6)) — the window re-sums over s below
+          // run over ≤7 day-rows per frame, not corpus rows
+          operators.GridSum.exactSum(
             operators.GridSum.unscaled(col("value").cast("decimal(18,6)")),
-            6, "decimal(28,6)").as("s"))
+            6).cast("decimal(28,6)").as("s"))
       val w = Window.partitionBy("event_type").orderBy("day").rangeBetween(-6, 0)
       daily.select(col("event_type"), col("day"),
         sum("n").over(w).as("n7"),
@@ -3473,9 +3447,9 @@ object SparkEntry {
           .as("latest_priority"),
         min(col("__day")).as("first_day"),
         max(col("__day")).as("last_day"),
-        operators.GridSum.sumUnscaledAsDecimal(
+        operators.GridSum.exactSum(
           operators.GridSum.unscaled(col("o_totalprice").cast("decimal(14,2)")),
-          2, "decimal(24,2)").as("spend_dec"))
+          2).cast("decimal(24,2)").as("spend_dec"))
       agg.join(mode, "o_custkey")
         .select(col("o_custkey"), col("status_mode"), col("latest_priority"),
           col("n_orders"), col("first_day"), col("last_day"),

@@ -343,12 +343,11 @@ object Analytics {
       .groupBy("k")
       .agg(count(lit(1)).as("n_intervals"),
         sum("dur_s").as("dur_total_s"),
-        // limb form of cast(sum(v·dur) AS double): the unscaled product
-        // rides as one long multiply per row — unscaled(v·dur) =
-        // unscaled(v)·dur at scale 2 (dur is integral) — instead of a
-        // widened-decimal BigDecimal multiply+add per row (r21 sweep)
-        GridSum.sumUnscaledAsDouble(
-          GridSum.unscaled(col("v")) * col("dur_s"), 2).as("vdur"))
+        // exact cast(sum(v·dur) AS double): unscaled(v·dur) =
+        // unscaled(v)·dur at scale 2 (dur is integral), one long multiply
+        // per row, ANSI-loud once |v|·dur_s ≥ 9.2e16 (2⁶³/10²)
+        GridSum.exactSum(
+          GridSum.unscaled(col("v")) * col("dur_s"), 2).cast("double").as("vdur"))
       // a key whose gaps are ALL sub-second floors every dur_s to 0, so
       // dur_total_s = 0 exactly and ANSI would throw on the division —
       // entirely plausible in real event data. NULL twap there (the
@@ -379,14 +378,12 @@ object Analytics {
       .select(col("grp"), expr(s"tus div $DayMicros").as("day"), col("v"))
       .groupBy("grp", "day")
       .agg(count(lit(1)).as("n_d"),
-        // limb form of sum(decimal(14,2)) cast (18,2): same value, same
-        // type, same ANSI overflow point, no per-row BigDecimal (r21)
-        GridSum.sumUnscaledAsDecimal(GridSum.unscaled(col("v")), 2,
-          "decimal(18,2)").as("s_d"))
+        // exact sum(decimal(14,2)) cast (18,2): same value, same type,
+        // same ANSI overflow point, no per-row BigDecimal (r21)
+        GridSum.exactSum(GridSum.unscaled(col("v")), 2).cast("decimal(18,2)").as("s_d"))
     val totals = daily.groupBy("grp").agg(
       sum("n_d").as("n_g"),
-      GridSum.sumUnscaledAsDecimal(GridSum.unscaled(col("s_d")), 2,
-        "decimal(18,2)").as("s_g"))
+      GridSum.exactSum(GridSum.unscaled(col("s_d")), 2).cast("decimal(18,2)").as("s_g"))
     val w = Window.partitionBy("grp").orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     daily.join(broadcast(totals), "grp")
@@ -573,13 +570,13 @@ object Analytics {
     val base = events.select(id.as("event_id"), group.as("grp"), value.as("v"))
     val stats = base.groupBy("grp").agg(
       count(lit(1)).as("n"),
-      // limb forms (r21 sweep): the sum of squares rides as one long
-      // multiply of the unscaled value with itself (scale 4)
-      GridSum.sumUnscaledAsDouble(
-        GridSum.unscaled(col("v").cast("decimal(14,2)")), 2).as("s"),
-      GridSum.sumUnscaledAsDouble(
+      // the sum of squares rides as one long multiply of the unscaled
+      // value with itself (scale 4), ANSI-loud once |v| ≥ 3.04e7 (√2⁶³/10²)
+      GridSum.exactSum(
+        GridSum.unscaled(col("v").cast("decimal(14,2)")), 2).cast("double").as("s"),
+      GridSum.exactSum(
         GridSum.unscaled(col("v").cast("decimal(14,2)")) *
-          GridSum.unscaled(col("v").cast("decimal(14,2)")), 4).as("q"))
+          GridSum.unscaled(col("v").cast("decimal(14,2)")), 4).cast("double").as("q"))
     val mean = col("s") / col("n")
     val vr = col("q") / col("n") - (col("s") / col("n")) * (col("s") / col("n"))
     base.join(broadcast(stats), "grp")

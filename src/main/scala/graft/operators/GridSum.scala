@@ -1,84 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
-/** Two-level exact grid sums: per-partition LONG limb sums combined in
-  * decimal across partitions (VERDICT r18 #3).
-  *
-  * The problem it closes: summing `round(x·1e12)` grid integers through a
-  * `decimal(28,0)` buffer allocates a BigDecimal per input row, and the
-  * r18 diagnosis of q_pagerank's sf1 pathology measured that path as
-  * intermittently CATASTROPHIC — same plan, same data read 36.7/60.5/
-  * 69.3/7.3 s across four runs where a long-backed sum reads a stable
-  * 5.5–9.9 s. Pagerank could switch to a plain long sum because its
-  * per-node total is mass-bounded (~1e12); q_kmeans' coordinate sums and
-  * q_lm_score's surprisal sums are NOT mass-bounded — a 1e9-member
-  * cluster or 1e6-token document legitimately overflows a single long at
-  * the 1e-12 grid — so they kept the decimal buffer and its latent 10×
-  * phantom.
-  *
-  * The fix is pure integer algebra. Each grid value v (a long) splits
-  * into two 31-bit limbs:
-  *
-  *   hi = v >> 31  (arithmetic shift = floor(v / 2^31), sign-carrying)
-  *   lo = v & (2^31 − 1)                 (∈ [0, 2^31), always nonneg)
-  *   v  = hi · 2^31 + lo                 (exact for every 64-bit long)
-  *
-  * Limb sums stay LONGS per (group, Spark partition): Σlo over n rows is
-  * < n·2^31, safe to ~4.3e9 rows PER PARTITION (no partition is that
-  * large); Σhi ≤ Σ|v|/2^31, and any total representable in the final
-  * decimal(28,0) keeps even the GLOBAL Σhi ≤ ~4.7e18 < Long.MaxValue —
-  * so the per-partition partial can never be the overflow site for any
-  * sum the old decimal buffer could represent. Partials then combine in
-  * decimal — one row per (group, partition), so the BigDecimal work is
-  * proportional to partial count, not row count. Under ANSI (this
-  * engine's mode) any out-of-domain value fails LOUD at the long cast or
-  * limb sum instead of wrapping.
-  *
-  * Bit-identity contract: Σv = 2^31·Σhi + Σlo exactly, so the combined
-  * decimal is the SAME integer the one-level decimal(28,0) sum produced,
-  * and every downstream double cast is bit-identical — oracle hashes
-  * unchanged. Partitioning-invariant by associativity of integer
-  * addition (GridSumSpec pins both properties).
-  *
-  * Usage shape (the partial/final split is two groupBys; the first adds
-  * [[org.apache.spark.sql.functions.spark_partition_id]] to the keys, so
-  * its map-side combine collapses within each partition exactly like the
-  * one-level partial aggregate did, and the added final exchange moves
-  * only partial-count rows):
-  *
-  * {{{
-  * df.select(keys, v, spark_partition_id().as("_pid"))
-  *   .groupBy(keys :+ "_pid")
-  *   .agg(sum(GridSum.hi(col("v"))).as("_hi"),
-  *        sum(GridSum.lo(col("v"))).as("_lo"), ...)
-  *   .groupBy(keys)
-  *   .agg(GridSum.combine(col("_hi"), col("_lo")).as("total"), ...)
-  * }}}
+/** Exact, order-insensitive decimal sums over codegen'd longs: the
+  * row-level converters [[grid12]] and [[unscaled]] turn a value into the
+  * unscaled long of an exact decimal, and [[exactSum]] sums those longs
+  * with no per-row BigDecimal (the r18 intermittent-10× CPU class of
+  * precision > 18 decimal aggregation buffers) and no row-count bound.
   */
 private[graft] object GridSum {
-
-  /** 2^31 — the limb base. 31 bits keeps Σlo long-safe past any real
-    * partition row count while leaving Σhi headroom for the full
-    * decimal(28,0) value domain (see object doc).
-    */
-  val LimbBase: Long = 1L << 31
-
-  /** High limb of a long grid value: floor(v / 2^31), sign-carrying. */
-  def hi(v: Column): Column = shiftright(v, 31)
-
-  /** Low limb of a long grid value: v mod 2^31, always in [0, 2^31). */
-  def lo(v: Column): Column = v.bitwiseAND(lit(LimbBase - 1))
-
-  /** Exact decimal total from per-partition long limb partials: sums the
-    * partials in decimal (they are partial-count-many rows, not
-    * row-count-many), then recombines 2^31·Σhi + Σlo. Use as a FINAL
-    * aggregate expression over the partial columns.
-    */
-  def combine(hiPartial: Column, loPartial: Column): Column =
-    sum(hiPartial.cast("decimal(28,0)")) * lit(LimbBase) +
-      sum(loPartial.cast("decimal(28,0)"))
 
   /** Scale-12 grid value of a DOUBLE, as the unscaled long of
     * `cast(v AS decimal(18,12))` — the exact integer the old per-row
@@ -87,12 +17,7 @@ private[graft] object GridSum {
     * `toUnscaledLong`, no re-rounding). Precision 18, not 28: a scale-12
     * long-backed decimal holds |v| < 10⁶, which covers every consumer
     * (norms, squared distances, and embedding components are all ≲10²)
-    * and fails ANSI-LOUD beyond, the GridSum overflow philosophy. Feed
-    * the result through [[hi]]/[[lo]] long limb sums and finish with
-    * [[sum12]] — the VERDICT r19 #5 closure of the last
-    * BigDecimal-per-row aggregation buffers (the r18 10×-phantom class:
-    * same plan, same data, intermittent 10× CPU in the non-long-backed
-    * Decimal sum path).
+    * and fails ANSI-LOUD beyond. Sum with `exactSum(g, 12)`.
     */
   def grid12(v: Column): Column = {
     import org.apache.spark.sql.GraftSqlBridge
@@ -100,22 +25,6 @@ private[graft] object GridSum {
     import org.apache.spark.sql.types.DecimalType
     GraftSqlBridge.column(UnscaledValue(
       GraftSqlBridge.expression(v.cast(DecimalType(18, 12)))))
-  }
-
-  /** Exact double total of [[grid12]] values — bit-identical to
-    * `cast(sum(v.cast("decimal(28,12)")) AS double)` over the same rows
-    * (GridSum12Spec pins it): whole-group LONG limb sums, one
-    * [[graft.functions.Limb12Total]] recombine per group. Single-level
-    * form (the measured r19 choice — the two-level pid split's extra
-    * exchange was a steady 1.6–1.8× regression): Σlo is ANSI-loud past
-    * 2³² rows in ONE group; Σhi holds any total < ~2×10¹⁶, six orders
-    * above the consumers' real mass at 100 TB.
-    */
-  def sum12(g: Column): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(graft.functions.Limb12Total(
-      GraftSqlBridge.expression(sum(hi(g))),
-      GraftSqlBridge.expression(sum(lo(g)))))
   }
 
   /** Unscaled long view of an exact long-backed decimal column
@@ -132,63 +41,16 @@ private[graft] object GridSum {
     GraftSqlBridge.column(UnscaledValue(GraftSqlBridge.expression(c)))
   }
 
-  /** Exact double total from the two DECIMAL limb-partial sums of the
-    * two-level form ([[combine]]'s operands): recombines U = 2³¹·Σhi +
-    * Σlo in decimal and converts via BigDecimal(U, scale).doubleValue —
-    * bit-identical to `cast(sum(v AS decimal(p,scale)) AS double)` over
-    * the same rows (GridSum12Spec pins it). Use as the FINAL aggregate
-    * expression over per-partition limb partials when one group can
-    * exceed 2³² rows (the q1_agg global groups at 100 TB) — the
-    * single-level [[sum12]]/[[sumUnscaledAsDouble]] forms stay for
-    * per-key aggregations whose groups are bounded.
+  /** Exact sum of unscaled longs `u` as `decimal(38, scale)`
+    * ([[graft.functions.ExactSum]]): value-identical to `sum` over the
+    * decimal(p ≤ 18, scale) the longs came from, for any row count and any
+    * partitioning; ANSI-loud only once the total reaches 2⁹⁴ unscaled.
+    * `.cast("double")` is bit-identical to `cast(sum(dec) AS double)`, and
+    * `.cast(t)` to `sum(dec)` where `t` is that sum's result type.
     */
-  def totalAsDouble(hiPartial: Column, loPartial: Column, scale: Int): Column = {
+  def exactSum(u: Column, scale: Int): Column = {
     import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(graft.functions.UnscaledToDouble(
-      GraftSqlBridge.expression(combine(hiPartial, loPartial)), scale))
+    GraftSqlBridge.column(graft.functions.ExactSum(
+      GraftSqlBridge.expression(u), scale).toAggregateExpression())
   }
-
-  /** Exact double total of [[unscaled]] values via whole-group LONG limb
-    * sums — the single-level form of [[totalAsDouble]], bit-identical to
-    * `cast(sum(v AS decimal(p,scale)) AS double)`: one aggregate, plain
-    * long arithmetic per row, one BigDecimal per GROUP. Σlo is ANSI-loud
-    * past 2³² rows in one group; Σhi holds any total the old
-    * decimal(p≤28) buffer could represent.
-    */
-  def sumUnscaledAsDouble(u: Column, scale: Int): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(graft.functions.UnscaledToDouble(
-      GraftSqlBridge.expression(combineLongSums(sum(hi(u)), sum(lo(u)))), scale))
-  }
-
-  /** Exact DECIMAL total of [[unscaled]] values via whole-group LONG
-    * limb sums — the decimal-result sibling of [[sumUnscaledAsDouble]]
-    * for sites whose sum stays decimal in the output schema (r21 sweep,
-    * VERDICT r20 #2): recombines U = 2³¹·Σhi + Σlo in decimal, rescales
-    * by the exact literal 10^-scale (U is the unscaled integer of the
-    * total, so the product is the total itself at scale `scale`), and
-    * casts to the ORIGINAL sum's result type — value- and type-identical
-    * to `sum(v)` over decimal(p, scale) inputs (GridSum12Spec pins it,
-    * negatives included). Same overflow domain as
-    * [[sumUnscaledAsDouble]]: Σlo is ANSI-loud past 2³² rows in one
-    * group; the final cast is ANSI-loud exactly where the original
-    * sum-then-cast was.
-    */
-  def sumUnscaledAsDecimal(u: Column, scale: Int, resultType: String): Column =
-    (combineLongSums(sum(hi(u)), sum(lo(u))) *
-      lit(java.math.BigDecimal.valueOf(1L, scale))).cast(resultType)
-
-  /** Exact decimal total from whole-group LONG limb sums — the
-    * single-level form: one aggregate, no partition sub-key, so the
-    * plan keeps exactly the stage count of the plain decimal sum it
-    * replaces while doing only long arithmetic per row. Overflow
-    * domain: Σlo < n·2^31 overflows (ANSI-loud) only at n ≥ 2^32 rows
-    * in ONE group; Σhi stays under Long.MaxValue for any total the
-    * final decimal(28,0) can represent. Use the two-level
-    * [[combine]]+pid form instead when a single group can plausibly
-    * exceed ~4e9 rows.
-    */
-  def combineLongSums(hiSum: Column, loSum: Column): Column =
-    hiSum.cast("decimal(28,0)") * lit(LimbBase) +
-      loSum.cast("decimal(28,0)")
 }

@@ -28,22 +28,22 @@ object Incremental {
     */
   def maintainSumCount(base: DataFrame, changes: DataFrame, changeTag: Column,
                        key: Column, value: Column): DataFrame = {
-    // limb forms of the sum(decimal(14,2)) maintenance sums (r21 sweep):
+    // exact forms of the sum(decimal(14,2)) maintenance sums (r21 sweep):
     // same decimal(24,2) results, long arithmetic per row — the signed
     // delta negates the UNSCALED long, which is exactly -v at scale 2
     val b = base.groupBy(key.as("grp")).agg(
       count(lit(1)).as("n0"),
-      GridSum.sumUnscaledAsDecimal(
-        GridSum.unscaled(value.cast("decimal(14,2)")), 2, "decimal(24,2)").as("s0"))
+      GridSum.exactSum(
+        GridSum.unscaled(value.cast("decimal(14,2)")), 2).cast("decimal(24,2)").as("s0"))
     val d = changes
       .select(key.as("grp"),
         when(changeTag === "added", lit(1L)).otherwise(lit(-1L)).as("sgn"),
         GridSum.unscaled(value.cast("decimal(14,2)")).as("uv"))
       .groupBy("grp").agg(
         sum(col("sgn")).as("dn"),
-        GridSum.sumUnscaledAsDecimal(
+        GridSum.exactSum(
           when(col("sgn") === 1L, col("uv")).otherwise(-col("uv")),
-          2, "decimal(24,2)").as("ds"))
+          2).cast("decimal(24,2)").as("ds"))
     b.join(d, Seq("grp"), "full_outer")
       .select(col("grp"),
         (coalesce(col("n0"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),

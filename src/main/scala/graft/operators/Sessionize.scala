@@ -42,9 +42,9 @@ object Sessionize {
         count(lit(1)).as("n_events"),
         min(unix_micros(col("__ts"))).as("start_us"),
         max(unix_micros(col("__ts"))).as("end_us"),
-        // limb form of cast(sum(decimal(18,6)) AS double) — bit-identical,
-        // no per-row BigDecimal aggregation buffer (r21 sweep)
-        GridSum.sumUnscaledAsDouble(
-          GridSum.unscaled(col("__v").cast("decimal(18,6)")), 6).as("sum_value"))
+        // exact cast(sum(decimal(18,6)) AS double) — bit-identical, no
+        // per-row BigDecimal aggregation buffer (r21 sweep)
+        GridSum.exactSum(
+          GridSum.unscaled(col("__v").cast("decimal(18,6)")), 6).cast("double").as("sum_value"))
   }
 }

@@ -465,15 +465,15 @@ object Similarity {
     val c = corpus.select(col("id").as("nbr_id"), asDouble(col("vec")).as("nbr_vec"))
       .withColumn("bucket", signature(col("nbr_vec"), hp))
       .withColumn("nbr_nrm", norm(col("nbr_vec")))
-    // Coordinate means stay exact-order-invariant, now through LONG limb
-    // sums (GridSum.grid12/sum12 — VERDICT r19 #5): bit-identical to the
+    // Coordinate means stay exact-order-invariant through
+    // GridSum.grid12/exactSum (VERDICT r19 #5): bit-identical to the
     // decimal(28,12) sum it replaces, without the per-row BigDecimal
     // aggregation buffer (the r18 intermittent-10× class).
     val centroids = c
       .select(col("bucket"), posexplode(col("nbr_vec")).as(Seq("pos", "x")))
       .select(col("bucket"), col("pos"), GridSum.grid12(col("x")).as("__g"))
       .groupBy("bucket", "pos")
-      .agg((GridSum.sum12(col("__g")) / count(lit(1))).as("m"))
+      .agg((GridSum.exactSum(col("__g"), 12).cast("double") / count(lit(1))).as("m"))
       .groupBy("bucket")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
         s => s.getField("m")).as("centroid"))
@@ -572,7 +572,7 @@ object Similarity {
 
   /** Per-group embedding statistics (count + exact norm sum). The norm is a
     * per-row double (deterministic); the cross-row sum is the exact
-    * scale-12 grid integer through LONG limb sums ([[GridSum]]), so
+    * scale-12 grid integer through [[GridSum.exactSum]], so
     * partial-aggregation order cannot perturb the result and no per-row
     * Decimal buffer is allocated.
     */
@@ -580,9 +580,9 @@ object Similarity {
     df.select(groupCol.as("grp"), GridSum.grid12(norm(asDouble(vec))).as("__g"))
       .groupBy("grp")
       .agg(count(lit(1)).as("n"),
-        // long limb sums, one recombine per group — bit-identical to the
-        // decimal(28,12) sum (GridSum12Spec), no per-row Decimal buffer
-        GridSum.sum12(col("__g")).as("sum_norm"))
+        // bit-identical to the decimal(28,12) sum (GridSum12Spec), no
+        // per-row Decimal buffer
+        GridSum.exactSum(col("__g"), 12).cast("double").as("sum_norm"))
 
   /** L2-normalize embeddings to unit vectors — the prep step before
     * cosine reduces to a dot product (inner-product ANN over unit
@@ -652,7 +652,7 @@ object Similarity {
       .select(col("nbr_id"), col("nbr_vec"), col("nbr_nrm"),
         array((0 until m).map(s => col(s"__c$s")): _*).as("codes"))
     // codebooks: exact order-invariant mean of each (subspace, code)
-    // bucket — long limb sums (GridSum), bit-identical to the decimal
+    // bucket — GridSum.exactSum, bit-identical to the decimal
     // form it replaces, no per-row BigDecimal buffer
     val cbooks = coded
       .select(posexplode(col("codes")).as(Seq("s", "code")), col("nbr_vec"))
@@ -661,7 +661,7 @@ object Similarity {
       .select(col("s"), col("code"), posexplode(col("sv")).as(Seq("pos", "x")))
       .select(col("s"), col("code"), col("pos"), GridSum.grid12(col("x")).as("__g"))
       .groupBy("s", "code", "pos")
-      .agg((GridSum.sum12(col("__g")) / count(lit(1))).as("mn"))
+      .agg((GridSum.exactSum(col("__g"), 12).cast("double") / count(lit(1))).as("mn"))
       .groupBy("s", "code")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("mn")))),
         t => t.getField("mn")).as("centroid"))

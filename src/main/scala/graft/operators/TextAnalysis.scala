@@ -191,26 +191,16 @@ object TextAnalysis {
           .cast("long").as("qbits"),
         round((log2(col("n_total")) - log2(col("c"))) * lit(1.0e12))
           .cast("long").as("nb"))
-    // Limb grid sum (VERDICT r18 #3, [[GridSum]]): per-token surprisal
-    // grid integers sum as LONG 31-bit limbs — no per-row BigDecimal
-    // (the r18 decimal-buffer pathology) — recombined in decimal once
-    // per document, bit-identical to the old one-level decimal(28,0)
-    // sum. A 1e6-token document's TOTAL exceeds a single long at the
-    // 1e-12 grid (why this sum could not take pagerank's plain-long
-    // form), but the limb split holds to 2^32 tokens per document
-    // (Σlo's ANSI-loud bound) — far past any real document. The
-    // SINGLE-level form ships: the per-partition two-level variant
-    // regressed the sf0.1 board 1.6× (extra exchange = AQE stage
-    // barrier) for protection this operator's group sizes never need.
+    // Exact grid-integer sum of per-token surprisals ([[GridSum.exactSum]];
+    // a document's total can pass a long at the 1e-12 grid): ANSI-loud
+    // only past 2⁹⁴ per document.
     toks.join(surp, "token")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"), sum("qbits").as("sq"),
-        sum(GridSum.hi(col("nb"))).as("_hi"),
-        sum(GridSum.lo(col("nb"))).as("_lo"))
+        GridSum.exactSum(col("nb"), 0).as("snb"))
       .select(col("doc_id"), col("n_tokens"),
         (col("sq").cast("double") / col("n_tokens")).as("bits_q"),
-        ((GridSum.combineLongSums(col("_hi"), col("_lo"))
-          .cast("double") / lit(1.0e12)) / col("n_tokens")).as("xent_bits"))
+        ((col("snb").cast("double") / lit(1.0e12)) / col("n_tokens")).as("xent_bits"))
   }
 
   /** Bigram-conditional LM surprisal — the next step up from [[lmScore]]'s

@@ -3,13 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{GridSum, Similarity}
+import graft.operators.{Analytics, GridSum, Similarity}
 
 /** Pins the scale-12 grid sum (VERDICT r19 #5 — the LAST
   * BigDecimal-per-row aggregation buffers): `GridSum.grid12` must carry
   * the EXACT unscaled integer of the old per-row decimal(28,12) cast,
-  * and `GridSum.sum12` over those longs must be BIT-identical (raw
-  * IEEE-754 bits, not approximate) to
+  * and `GridSum.exactSum(_, 12)` over those longs, cast to double, must be
+  * BIT-identical (raw IEEE-754 bits, not approximate) to
   * `cast(sum(v.cast("decimal(28,12)")) AS double)` — including totals
   * whose unscaled value exceeds a long — across any partitioning.
   */
@@ -43,29 +43,27 @@ class GridSum12Spec extends AnyFunSuite {
     }
   }
 
-  test("sum12 is raw-bit identical to the decimal(28,12) sum, any partitioning") {
+  private def gridTotal(g: org.apache.spark.sql.Column) = GridSum.exactSum(g, 12).cast("double")
+
+  test("exactSum(grid12) is bit-identical to the decimal(28,12) sum, any partitioning") {
     for (parts <- Seq(1, 5, 32)) {
       val df = (adversarial ++ spread).toDF("v").repartition(parts)
       val old = df.agg(sum(col("v").cast("decimal(28,12)")).cast("double")).first().getDouble(0)
       val neu = df.select(GridSum.grid12(col("v")).as("g"))
-        .agg(GridSum.sum12(col("g"))).first().getDouble(0)
+        .agg(gridTotal(col("g"))).first().getDouble(0)
       assert(bits(neu) == bits(old),
-        s"parts=$parts: sum12 $neu != decimal sum $old (bit-level)")
+        s"parts=$parts: exactSum $neu != decimal sum $old (bit-level)")
     }
   }
 
-  test("sum12 survives totals past Long's unscaled range") {
-    // 2^32 identical values would be needed to overflow Σlo; instead
-    // overflow the TOTAL's unscaled long: 3M rows of 999999.9 have
-    // unscaled sum ≈ 3e18... push past 9.2e18 with 10M rows — too slow
-    // for a unit test, so use the algebra directly: limb sums from two
-    // rows whose recombined U exceeds a long.
+  test("exactSum(grid12) survives totals past Long's unscaled range") {
+    // 12000 copies of four values whose unscaled total exceeds a long.
     val vs = Seq(999999.999999999, 999999.999999998, 123.456, -0.000000000001)
     val rows = 12000 // total ≈ 2.4e10, unscaled ≈ 2.4e22 > Long.MaxValue
     val df = (1 to rows).flatMap(_ => vs).toDF("v").repartition(7)
     val old = df.agg(sum(col("v").cast("decimal(28,12)")).cast("double")).first().getDouble(0)
     val neu = df.select(GridSum.grid12(col("v")).as("g"))
-      .agg(GridSum.sum12(col("g"))).first().getDouble(0)
+      .agg(gridTotal(col("g"))).first().getDouble(0)
     assert(bits(neu) == bits(old))
   }
 
@@ -76,9 +74,9 @@ class GridSum12Spec extends AnyFunSuite {
     assert(e.getMessage != null)
   }
 
-  test("sumUnscaledAsDouble/Decimal equal the plain decimal sum, value AND type") {
-    // the r21 sweep's two helpers over 2-dp money-like values, negatives
-    // and HALF_UP .xx5 boundaries included, across partitionings
+  test("exactSum cast to decimal or double equals the plain decimal sum, value AND type") {
+    // 2-dp money-like values, negatives and HALF_UP .xx5 boundaries
+    // included, across partitionings
     val vals = Seq(0.0, -0.005, 0.005, 1.115, -1.115, 99999.99, -99999.99,
       0.01, 123.45) ++ Seq.fill(3000)((rnd.nextDouble() - 0.5) * 1e5)
     for (parts <- Seq(1, 7, 32)) {
@@ -87,9 +85,9 @@ class GridSum12Spec extends AnyFunSuite {
       val oldSum = df.agg(sum(col("d"))).first().getDecimal(0)
       val oldDouble = df.agg(sum(col("d")).cast("double")).first().getDouble(0)
       val newDec = df.select(GridSum.unscaled(col("d")).as("u"))
-        .agg(GridSum.sumUnscaledAsDecimal(col("u"), 2, "decimal(24,2)"))
+        .agg(GridSum.exactSum(col("u"), 2).cast("decimal(24,2)"))
       val newDouble = df.select(GridSum.unscaled(col("d")).as("u"))
-        .agg(GridSum.sumUnscaledAsDouble(col("u"), 2)).first().getDouble(0)
+        .agg(GridSum.exactSum(col("u"), 2).cast("double")).first().getDouble(0)
       assert(newDec.schema.head.dataType ==
         org.apache.spark.sql.types.DecimalType(24, 2))
       assert(newDec.first().getDecimal(0).compareTo(oldSum) == 0,
@@ -97,6 +95,21 @@ class GridSum12Spec extends AnyFunSuite {
       assert(bits(newDouble) == bits(oldDouble),
         s"parts=$parts: double totals diverge at the bit level")
     }
+  }
+
+  test("zscoreOutliers' sum of squares fails ANSI-loud past |v| ~ 3.04e7") {
+    // unscaled(v)² = (100·v)² passes 2⁶³ at |v| ≈ 3.04e7: the long
+    // multiply must throw, never wrap into a plausible-looking variance
+    val df = Seq((1L, "g", 1.0), (2L, "g", 4.0e7), (3L, "g", 2.0)).toDF("id", "grp", "v")
+    val e = intercept[Exception] {
+      Analytics.zscoreOutliers(df, col("id"), col("grp"), col("v")).collect()
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[ArithmeticException] &&
+      c.getMessage.contains("ARITHMETIC_OVERFLOW")), e.toString)
+    // just inside the domain the same group still returns its numbers
+    val ok = Seq((1L, "g", 1.0), (2L, "g", 3.0e7), (3L, "g", 2.0)).toDF("id", "grp", "v")
+    Analytics.zscoreOutliers(ok, col("id"), col("grp"), col("v")).collect()
   }
 
   test("normStats keeps its exact sum through the limb form") {

@@ -3,70 +3,136 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSeq, BindReferences, Expression, SparkPartitionID, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.types.LongType
+
+import graft.functions.ExactSum
 import graft.operators.{GridSum, TextAnalysis}
 
-/** Pins the two-level grid sum's partial/final split (VERDICT r18 #3):
-  * long 31-bit limb partials per Spark partition, decimal combine across
-  * partitions. The contract under test is BIT-IDENTITY with the one-level
+/** Pins the exact-sum aggregate ([[GridSum.exactSum]], a carrying
+  * (hi, lo) long buffer). The contract under test is BIT-IDENTITY with the
   * decimal(28,0) sum it replaced — including totals a single long cannot
-  * hold — and partitioning invariance (the partial boundaries are
-  * placement accidents; the combined integer must not be).
+  * hold — partitioning invariance (partial buffers per Spark partition are
+  * placement accidents; the merged integer must not be), the `lo ∈ [0, 2³¹)`
+  * buffer invariant, and exactness past 2³² updates in one group.
   */
 class GridSumSpec extends AnyFunSuite {
 
   lazy val spark = SparkTest.session
   import spark.implicits._
 
+  private val Base = BigInt(1L << 31)
+  private val agg = ExactSum(AttributeReference("v", LongType)(), 0)
+  private val buffer = agg.aggBufferAttributes
+  private def bound(es: Seq[Expression], in: Seq[Attribute]): Seq[Expression] =
+    es.map(e => BindReferences.bindReference(e, AttributeSeq(in)))
+  private val update = bound(agg.updateExpressions, buffer :+ agg.child.asInstanceOf[Attribute])
+  private val merge = bound(agg.mergeExpressions, buffer ++ agg.inputAggBufferAttributes)
+  private val result = bound(Seq(agg.evaluateExpression), buffer).head
+
+  /** Both evaluation paths (interpreted and generated code) must agree;
+    * null hi reads back as None.
+    */
+  private def run(es: Seq[Expression], in: Any*): (Option[Long], Long) = {
+    val row = InternalRow(in: _*)
+    val interp = es.map(_.eval(row))
+    val gen = UnsafeProjection.create(es)(row)
+    val got = (Option(interp(0)).map(_.asInstanceOf[Long]), interp(1).asInstanceOf[Long])
+    assert(got == (if (gen.isNullAt(0)) None else Some(gen.getLong(0)), gen.getLong(1)))
+    got
+  }
+  private def total(b: (Option[Long], Long)): BigInt = {
+    val row = InternalRow(b._1.map(Long.box).orNull, b._2)
+    val d = UnsafeProjection.create(Seq(result))(row).getDecimal(0, 38, 0)
+    assert(d == result.eval(row))
+    BigInt(d.toJavaBigDecimal.unscaledValue())
+  }
+  private def buf(u: BigInt): (Option[Long], Long) = {
+    require((u >> 31).isValidLong, s"$u is outside the buffer's 2^94 domain")
+    (Some((u >> 31).toLong), (u & (Base - 1)).toLong)
+  }
+  private def inRange(b: (Option[Long], Long)): Boolean = b._2 >= 0 && b._2 < (1L << 31)
+
   test("limb identity: hi*2^31 + lo == v across signs and extremes") {
     val vs = Seq(0L, 1L, -1L, (1L << 31) - 1, 1L << 31, (1L << 31) + 1,
       -(1L << 31), -(1L << 31) - 1, 1234567890123L, -1234567890123L,
       Long.MaxValue, Long.MinValue + 1, Long.MinValue)
-    val got = vs.toDF("v")
-      .select(col("v"),
-        (GridSum.hi(col("v")) * lit(GridSum.LimbBase) + GridSum.lo(col("v")))
-          .as("recombined"),
-        GridSum.lo(col("v")).as("lo"))
-      .collect()
-    got.foreach { r =>
-      assert(r.getLong(1) == r.getLong(0), s"recombine broke for ${r.getLong(0)}")
-      assert(r.getLong(2) >= 0 && r.getLong(2) < GridSum.LimbBase,
-        s"lo out of [0, 2^31) for ${r.getLong(0)}")
+    for (v <- vs) {
+      val once = run(update, null, 0L, v)
+      assert(inRange(once), s"lo out of [0, 2^31) for $v")
+      assert(total(once) == BigInt(v), s"recombine broke for $v")
+      // a second update, and a merge of the two, carry out of lo
+      val twice = run(update, once._1.get, once._2, v)
+      val merged = run(merge, once._1.get, once._2, twice._1.get, twice._2)
+      assert(inRange(twice) && inRange(merged), s"carry left lo out of range for $v")
+      assert(total(twice) == BigInt(v) * 2 && total(merged) == BigInt(v) * 3)
     }
+    // a null row and an empty right-hand buffer leave the buffer as it was
+    assert(run(update, null, 0L, null) == (None, 0L))
+    assert(run(update, 5L, 7L, null) == (Some(5L), 7L))
+    assert(run(merge, 5L, 7L, null, 0L) == (Some(5L), 7L))
+  }
+
+  test("one group's buffer stays exact past 2^32 updates") {
+    // What 2^32 rows of v = 2^31 − 1 leave behind (U = 2^32·(2^31 − 1)),
+    // and 2^32 + 3 rows of v = −(2^60 + 12345), built by hand: a plain
+    // long sum of low limbs would overflow at the 2^32nd row.
+    val n = BigInt(1L << 32)
+    val a = n * (Base - 1)
+    val b = (n + 3) * BigInt(-(1L << 60) - 12345L)
+    val ab = run(merge, buf(a)._1.get, buf(a)._2, buf(b)._1.get, buf(b)._2)
+    assert(inRange(ab) && total(ab) == a + b)
+    val aa = run(merge, buf(a)._1.get, buf(a)._2, buf(a)._1.get, buf(a)._2)
+    assert(inRange(aa) && total(aa) == a * 2)
+    // further updates with Long.MinValue, -1, 0 and Long.MaxValue on top
+    var acc = ab
+    var want = a + b
+    for (v <- Seq(Long.MinValue, -1L, 0L, Long.MaxValue, (1L << 31) - 1)) {
+      acc = run(update, acc._1.get, acc._2, v)
+      want += v
+      assert(inRange(acc), s"lo out of [0, 2^31) after adding $v")
+      assert(total(acc) == want)
+    }
+    // hi is the only limit: a total at 2^94 fails ANSI-loud, never wraps
+    val e = intercept[ArithmeticException] {
+      run(merge, Long.MaxValue, 0L, 1L, 0L)
+    }
+    assert(e.getMessage.contains("ARITHMETIC_OVERFLOW"))
   }
 
   test("two-level sum equals the one-level decimal sum past Long range") {
     // 5 × 8e18 = 4e19 > Long.MaxValue: a plain long sum would overflow
-    // (the reason q_kmeans/q_lm_score kept decimal buffers); the
-    // two-level form must reproduce the decimal sum's exact integer.
+    // (the reason q_kmeans/q_lm_score kept decimal buffers); the partial
+    // buffers of 3 partitions, merged by the final aggregate, must
+    // reproduce the decimal sum's exact integer.
     val vs = Seq(8000000000000000000L, 8000000000000000000L,
       8000000000000000000L, 8000000000000000000L, 8000000000000000000L,
       -3L, 7L)
     val df = vs.toDF("v").repartition(3)
     val oneLevel = df.agg(sum(col("v").cast("decimal(28,0)"))).first().getDecimal(0)
-    val twoLevel = df
-      .select(col("v"), spark_partition_id().as("_pid"))
-      .groupBy("_pid")
-      .agg(sum(GridSum.hi(col("v"))).as("_hi"), sum(GridSum.lo(col("v"))).as("_lo"))
-      .agg(GridSum.combine(col("_hi"), col("_lo")))
-      .first().getDecimal(0)
+    val twoLevel = df.agg(GridSum.exactSum(col("v"), 0)).first().getDecimal(0)
     assert(twoLevel.compareTo(oneLevel) == 0,
       s"two-level $twoLevel != one-level $oneLevel")
   }
 
-  test("single-level limb sums equal the decimal sum past Long range (combineLongSums)") {
-    // The form q_kmeans/q_lm_score ship: whole-group LONG limb sums,
-    // one decimal recombine per group — same stage count as the decimal
-    // sum it replaced, exact for totals a plain long sum cannot hold.
-    val vs = Seq(8000000000000000000L, 8000000000000000000L,
-      8000000000000000000L, 8000000000000000000L, 8000000000000000000L,
-      -3L, 7L, -8000000000000000000L)
-    val df = vs.toDF("v").repartition(3)
-    val oneLevel = df.agg(sum(col("v").cast("decimal(28,0)"))).first().getDecimal(0)
-    val got = df
-      .agg(sum(GridSum.hi(col("v"))).as("_hi"), sum(GridSum.lo(col("v"))).as("_lo"))
-      .select(GridSum.combineLongSums(col("_hi"), col("_lo")))
-      .first().getDecimal(0)
-    assert(got.compareTo(oneLevel) == 0, s"single-level $got != decimal $oneLevel")
+  test("exactSum equals the decimal sum past Long range; empty/all-null groups are null") {
+    val vs = Seq(Some(8000000000000000000L), Some(8000000000000000000L),
+      Some(8000000000000000000L), Some(8000000000000000000L),
+      Some(8000000000000000000L), Some(-3L), None, Some(7L),
+      Some(-8000000000000000000L))
+    val rows = vs.map(v => ("g", v)) ++ Seq(("nulls", None), ("nulls", None))
+    val df = rows.toDF("g", "v").repartition(3)
+    val want = sum(col("v").cast("decimal(28,0)"))
+    val got = GridSum.exactSum(col("v"), 0)
+    val byGroup = df.groupBy("g").agg(want, got).collect()
+      .map(r => r.getString(0) -> (Option(r.getDecimal(1)), Option(r.getDecimal(2)))).toMap
+    val (w, g) = byGroup("g")
+    assert(g.get.compareTo(w.get) == 0, s"exactSum ${g.get} != decimal ${w.get}")
+    assert(byGroup("nulls") == ((None, None)))
+    val empty = df.where(lit(false)).agg(want, got).first()
+    assert(empty.isNullAt(0) && empty.isNullAt(1))
   }
 
   test("two-level sum is partitioning-invariant (grouped, mixed signs)") {
@@ -74,11 +140,8 @@ class GridSumSpec extends AnyFunSuite {
       (if (i % 2 == 0) 1L else -1L)))
     def sums(parts: Int): Map[String, java.math.BigDecimal] = rows.toDF("g", "v")
       .repartition(parts)
-      .select(col("g"), col("v"), spark_partition_id().as("_pid"))
-      .groupBy("g", "_pid")
-      .agg(sum(GridSum.hi(col("v"))).as("_hi"), sum(GridSum.lo(col("v"))).as("_lo"))
       .groupBy("g")
-      .agg(GridSum.combine(col("_hi"), col("_lo")).as("s"))
+      .agg(GridSum.exactSum(col("v"), 0).as("s"))
       .collect().map(r => r.getString(0) -> r.getDecimal(1)).toMap
     val a = sums(1); val b = sums(5); val c = sums(32)
     assert(a.keySet == b.keySet && b.keySet == c.keySet)
@@ -86,6 +149,14 @@ class GridSumSpec extends AnyFunSuite {
       assert(a(k).compareTo(b(k)) == 0 && b(k).compareTo(c(k)) == 0,
         s"group $k drifted across partitionings: ${a(k)} / ${b(k)} / ${c(k)}")
     }
+  }
+
+  test("q1_agg is one aggregate over exact sums, with no partition-id split") {
+    val plan = SparkEntry.entry(spark).queryExecution.optimizedPlan // q1_agg
+    assert(plan.collect { case a: Aggregate => a }.size == 1, s"expected one Aggregate:\n$plan")
+    val pid = plan.collectFirst { case n if n.expressions.exists(
+      _.find(_.isInstanceOf[SparkPartitionID]).isDefined) => n }
+    assert(pid.isEmpty, s"spark_partition_id survived:\n$plan")
   }
 
   test("lmScore's two-level xent_bits matches a direct decimal replay and is partition-invariant") {

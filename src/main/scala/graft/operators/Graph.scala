@@ -224,8 +224,15 @@ object Graph {
     * already-settled set, and the survivors are the r+1 frontier —
     * every round is one equi-join + one anti-join over output-sized
     * frontiers, terminating at the graph's eccentricity (frontier
-    * empty), never at a guessed round count. Settled/frontier caches are
-    * one round deep, like [[kCore]]'s.
+    * empty), never at a guessed round count.
+    *
+    * Plan size is linear in hops by construction: every layer (the
+    * sources, then each round's frontier) is sealed into its own
+    * lineage-truncated leaf ([[CacheScope.materialize]]), and the
+    * settled set is the union of those leaves. Round r's plan is
+    * therefore one frontier leaf, the cached edge list and r settled
+    * leaves, with no copy of any earlier round's plan. Cost per round:
+    * one seal job plus one emptiness probe over the sealed leaf.
     *
     * Output: (node, dist) for every REACHED node (sources at 0);
     * unreachable nodes emit no row.
@@ -241,37 +248,19 @@ object Graph {
       .unionByName(canon.select(col("v").as("u"), col("u").as("v")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     sym.count()
-    // ONE job per round: each round's frontier is cached and counted
-    // once (the count doubles as the empty-frontier fixpoint test), and
-    // `settled` stays a LAZY union over the cached frontiers — the
-    // anti-join scans only cached blocks, so no round re-materializes
-    // the settled set (the old grown.count() job) or runs a separate
-    // limit-1 emptiness probe. Peak cache is O(V) total across all
-    // frontiers — the same as one settled copy, without the transient
-    // 2× while grown and settled coexisted. Every SettleFoldRounds
-    // rounds the union is FOLDED into a localCheckpoint, the folded
-    // frontiers' caches released, and the frontier re-derived from the
-    // sealed leaf (the ssspBounded treatment, ADVICE r17) — and the
-    // fold is LOAD-BEARING, not just a scan optimization: each round's
-    // frontier plan references the prior settled union TWICE (the join
-    // and the anti-join), so the un-truncated logical plan DOUBLES per
-    // round — a 20-hop path graph hands Catalyst a ~2^20-node tree
-    // whose explain string alone OOMs the driver. Sealing every 4
-    // rounds caps the between-seal blowup at 2^SettleFoldRounds subtree
-    // copies. 8, not 4 (r19 A/B, VERDICT r18 #4): the board-scale BFS
-    // (~6-8 hops) pays ONE seal under fold-4 and none under fold-8 —
-    // 3.19 vs 2.71 s medians, same-window — while 2^8 copies of the
-    // settled subtree (~2.5k plan nodes) is still harmless to Catalyst;
-    // the r18 OOM needed the UNfolded 2^hops growth.
-    val SettleFoldRounds = 8
-    val frontierCaches = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var settled = sources.select(sourceCol.as("node")).distinct()
+    // Each layer is sealed, never merely persisted: a persisted frontier
+    // keeps its whole lineage (the previous frontier and every earlier
+    // layer through `settled`), so the plan and its explain string would
+    // grow geometrically per round (~4.5x per hop) and exhaust the driver
+    // heap within ~8 hops. A sealed leaf's plan is
+    // one LogicalRDD node; its blocks are reclaimed by the context
+    // cleaner once the leaf is unreferenced, so nothing is unpersisted.
+    var frontier = sources.select(sourceCol.as("node")).distinct()
       .withColumn("dist", lit(0L))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    frontierCaches += settled
-    var frontier = settled
+      .materialized
+    var settled = frontier
     var dist = 0L
-    var done = frontier.count() == 0
+    var done = frontier.isEmpty
     while (!done) {
       require(dist < maxHops,
         s"bfsDistances exceeded $maxHops hops - raise maxHops")
@@ -280,36 +269,20 @@ object Graph {
         .select(col("v").as("node")).distinct()
         .join(settled, Seq("node"), "left_anti")
         .withColumn("dist", lit(dist))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (next.count() == 0) {
-        next.unpersist()
-        done = true
-      } else {
-        frontierCaches += next
+        .materialized
+      // the empty-frontier fixpoint test reads the sealed blocks only
+      if (next.isEmpty) done = true
+      else {
         settled = settled.unionByName(next)
         frontier = next
-        if (dist % SettleFoldRounds == 0) {
-          // seal the union into one LogicalRDD leaf and re-derive the
-          // frontier FROM the leaf (a filter over it — no second
-          // materialization, and crucially a truncated plan: keeping
-          // the live frontier would carry the pre-seal plan into every
-          // later round); then every folded cache can be released —
-          // the rows now live in the checkpoint blocks
-          settled = settled.materialized
-          frontierCaches.foreach(_.unpersist())
-          frontierCaches.clear()
-          frontier = settled.where(col("dist") === dist)
-        }
       }
     }
     sym.unpersist()
-    // Same cache-release discipline as [[kCore]]: hand back checkpoint
-    // blocks the cleaner can reclaim, not a live CacheManager entry.
-    // Same cluster-mode caveat too: localCheckpoint blocks don't survive
-    // executor loss; reliable checkpoint() is the cluster-HA variant.
-    val result = settled.materialized
-    frontierCaches.foreach(_.unpersist())
-    result
+    // Seal the union once, so the caller holds one leaf, not hop-many.
+    // Cluster-mode caveat (as kCore's): localCheckpoint blocks don't
+    // survive executor loss; spark.graft.reliableCheckpoint=true routes
+    // every seal here to a reliable checkpoint instead.
+    settled.materialized
   }
 
   /** Hop-bounded weighted shortest paths (Bellman–Ford, `rounds`

@@ -573,19 +573,42 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("bfsDistances: high-eccentricity path crosses the settled-fold boundary") {
-    // 20-hop path: the settled set folds into a localCheckpoint every 8
-    // rounds (Graph.bfsDistances' SettleFoldRounds, chosen by the r19
-    // fold-4-vs-8 A/B; ADVICE r17 — without the fold the anti-join
-    // rescans every prior frontier leaf AND the logical plan doubles per
-    // round); distances must be unaffected across MULTIPLE fold seals
-    // (this path crosses two, at hops 8 and 16), including the source
-    // layer folded first.
+    // 20-hop path: Graph.bfsDistances seals every layer (the source layer
+    // first, then each round's frontier) into its own checkpoint leaf and
+    // anti-joins against the union of those leaves. Distances must be
+    // unaffected by the seals, and the 20 rounds must not exhaust the
+    // driver heap (a persisted, un-truncated frontier grew its plan ~4.5x
+    // per hop and ran a 7g driver out of heap at hop 8).
     val n = 21L
     val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("s", "d")
     val got = operators.Graph.bfsDistances(edges, col("s"), col("d"),
       Seq(0L).toDF("n"), col("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == (0L until n).map(i => i -> i).toMap)
+  }
+
+  test("bfsDistances: sealed plan size grows at most linearly in hops") {
+    // Heap-independent guard for the test above: with every layer sealed,
+    // a round's plan is a + b*r (a > 0), so doubling the hops from 3 to 6
+    // less than doubles the largest plan sealed; a lineage that keeps the
+    // earlier rounds grows it geometrically (~4.5x per hop).
+    def largestSealedPlan(hops: Long): Int = {
+      val edges = (0L until hops).map(i => (i, i + 1)).toDF("s", "d")
+      var largest = 0
+      operators.PlanCapture.sink = Some { (_, txt) =>
+        largest = math.max(largest, txt.length)
+      }
+      try {
+        val got = operators.Graph.bfsDistances(edges, col("s"), col("d"),
+          Seq(0L).toDF("n"), col("n"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == (0L to hops).map(i => i -> i).toMap)
+      } finally operators.PlanCapture.sink = None
+      largest
+    }
+    val (p3, p6) = (largestSealedPlan(3), largestSealedPlan(6))
+    assert(p3 > 0)
+    assert(p6 < 2 * p3, s"largest sealed plan: $p3 chars at 3 hops, $p6 at 6")
   }
 
   // ---- pagerank -------------------------------------------------------

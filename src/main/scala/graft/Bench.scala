@@ -460,7 +460,7 @@ object Bench {
     // r17 sf10 probe overwrote BENCH_full_latest.json between captures
     // and cost the closing run its comparison (ROUND17_NOTES §4.1).
     val sfBase = new java.io.File(sfDir).getName
-    val benchDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "/root/repo")
+    val benchDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", sys.props("user.dir"))
     val prior: Option[(String, Map[String, Double])] = try {
       val dir = new java.io.File(benchDir)
       val files: Seq[java.io.File] =

@@ -61,8 +61,7 @@ class ColfDataSource extends TableProvider with DataSourceRegister {
     // declaration too — time travel shows the schema AS OF that commit.
     ColfUtil.declaredMeta(ColfUtil.paths(options), conf,
         ColfUtil.versionAsOf(options)).foreach { m =>
-      return StructType(m.fields.map(f =>
-        StructField(f.name, ColfUtil.sparkType(f.tpe), f.nullable)))
+      return ColfUtil.sparkSchema(m.fields)
     }
     val sel = ColfUtil.resolveFileRefs(ColfUtil.paths(options), conf,
       ColfUtil.versionAsOf(options), ColfUtil.changesSince(options))
@@ -78,18 +77,8 @@ class ColfDataSource extends TableProvider with DataSourceRegister {
       throw new IllegalArgumentException(
         s"No .colf files found at ${ColfUtil.paths(options).mkString(", ")}")
     val dataSchema = inferDataSchema(files, options, conf)
-    // Hive-layout partition columns append after the file columns, typed
-    // by the format's own inference lattice over the observed values.
-    val partCols = ColfPartitions.partitionCols(files)
-    partCols.foldLeft(dataSchema) { (acc, pc) =>
-      if (acc.fieldNames.contains(pc))
-        throw new IllegalArgumentException(
-          s"colf: partition directory column '$pc' collides with a file column of " +
-            "the same name")
-      val values = files.flatMap(_.partValues.get(pc))
-      acc.add(StructField(pc, ColfUtil.sparkType(ColfPartitions.inferType(values)),
-        nullable = false))
-    }
+    StructType(dataSchema.fields ++ ColfUtil.sparkSchema(
+      ColfPartitions.partitionFields(files, dataSchema.fieldNames.toSet)).fields)
   }
 
   private def inferDataSchema(files: Seq[ColfFileRef], options: CaseInsensitiveStringMap,
@@ -135,9 +124,9 @@ class ColfDataSource extends TableProvider with DataSourceRegister {
       val merged = fields.values.toIndexedSeq.map { f =>
         if (presentIn(f.name) < files.length) f.copy(nullable = true) else f
       }
-      ColfUtil.sparkSchema(ColfSchema(0L, merged))
+      ColfUtil.sparkSchema(merged)
     } else {
-      ColfUtil.sparkSchema(ColfSchema(0L, fieldsOf(files.take(1)).head.toIndexedSeq))
+      ColfUtil.sparkSchema(fieldsOf(files.take(1)).head)
     }
   }
 
@@ -232,8 +221,10 @@ private[colf] object ColfUtil {
     * Hive-layout partitioning: a subdirectory named `k=v` is descended
     * into, its (k, v) recorded on every file beneath it (arbitrary
     * nesting: `dt=2024-01-01/lang=en/part.colf`). Other subdirectories
-    * are ignored, as before — only the explicit `k=v` shape opts a path
-    * segment into the table schema.
+    * are ignored — only the explicit `k=v` shape
+    * ([[ColfPartitions.parseSegment]]) opts a path segment into the
+    * table, and [[ColfVersions.listDataFiles]] is the one walk that
+    * applies it.
     *
     * Snapshot selection: a DIRECTORY that carries [[ColfVersions]]
     * manifests resolves to one version's exact file list (`versionAsOf`,
@@ -247,23 +238,8 @@ private[colf] object ColfUtil {
   def resolveFileRefs(paths: Seq[String], conf: Configuration,
       versionAsOf: Option[Long] = None, changesSince: Option[Long] = None,
       ignoreManifests: Boolean = false): Seq[ColfFileRef] = {
-    def walk(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
-        values: Map[String, String]): Seq[ColfFileRef] = {
-      val entries = fs.listStatus(dir).toSeq.sortBy(_.getPath.getName)
-      val here = entries
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".colf") &&
-          !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-        .map(s => ColfFileRef(s.getPath.toString, s.getLen, s.getModificationTime, values))
-      val below = entries
-        .filter(s => s.isDirectory && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith(".") && s.getPath.getName.count(_ == '=') == 1)
-        .flatMap { s =>
-          val Array(k, v) = s.getPath.getName.split("=", 2)
-          if (k.isEmpty) Seq.empty
-          else walk(fs, s.getPath, values + (k -> v))
-        }
-      here ++ below
-    }
+    def listing(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[ColfFileRef] =
+      ColfVersions.toRefs(fs, dir, ColfVersions.listDataFiles(fs, dir))
     ColfHeaderCache.mapParallel(paths) { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(conf)
@@ -271,7 +247,7 @@ private[colf] object ColfUtil {
         if (fs.exists(path)) Seq(fs.getFileStatus(path)) else Seq.empty
       }
       matched.flatMap { st =>
-        if (st.isDirectory && ignoreManifests) walk(fs, st.getPath, Map.empty)
+        if (st.isDirectory && ignoreManifests) listing(fs, st.getPath)
         else if (st.isDirectory) {
           (versionAsOf, changesSince) match {
             case (Some(v), _) =>
@@ -305,7 +281,7 @@ private[colf] object ColfUtil {
             case (None, None) =>
               ColfVersions.latest(fs, st.getPath) match {
                 case Some((_, entries)) => ColfVersions.toRefs(fs, st.getPath, entries)
-                case None               => walk(fs, st.getPath, Map.empty)
+                case None               => listing(fs, st.getPath)
               }
           }
         } else if (versionAsOf.isDefined || changesSince.isDefined) {
@@ -354,8 +330,8 @@ private[colf] object ColfUtil {
         "Cast the column first (COLF's type lattice is {int32, float64, utf8}).")
   }
 
-  def sparkSchema(s: ColfSchema): StructType =
-    StructType(s.fields.map(f => StructField(f.name, sparkType(f.tpe), f.nullable)))
+  def sparkSchema(fields: Seq[ColfField]): StructType =
+    StructType(fields.map(f => StructField(f.name, sparkType(f.tpe), f.nullable)))
 
   /** Partition-path values parsed to the TABLE schema's type for the
     * column (so pruning/absorption compares ints as ints, not strings).

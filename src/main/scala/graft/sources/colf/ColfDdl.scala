@@ -90,15 +90,9 @@ private[colf] object ColfDdl {
     val data = fields.values.toIndexedSeq.map { f =>
       if (presentIn(f.name) < recorded.length) f.copy(nullable = true) else f
     }
-    val refs = ColfVersions.toRefs(fs, root, entries)
-    val parts = ColfPartitions.partitionCols(refs)
-    val partFields = parts.map { pc =>
-      require(!fields.contains(pc),
-        s"colf: partition directory column '$pc' collides with a file column")
-      val values = refs.flatMap(_.partValues.get(pc))
-      ColfField(pc, ColfPartitions.inferType(values), nullable = false)
-    }
-    TableMeta(data ++ partFields, parts)
+    val partFields =
+      ColfPartitions.partitionFields(ColfVersions.toRefs(fs, root, entries), fields.contains)
+    TableMeta(data ++ partFields, partFields.map(_.name))
   }
 
   /** Apply one TableChange to the declaration (curried for foldLeft over

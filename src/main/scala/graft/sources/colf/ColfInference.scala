@@ -2,7 +2,6 @@ package graft.sources.colf
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** COLF schema inference over a raw all-string table, replicating the
   * reference's rules (writer.py:33-68, SURVEY.md §1.4) as ONE distributed
@@ -69,12 +68,6 @@ object ColfInference {
         else ColfType.Utf8
       ColfField(name, tpe, nullable = flag("nul", 0) == 1)
     }
-  }
-
-  def toSparkType(t: ColfType): DataType = t match {
-    case ColfType.Int32   => IntegerType
-    case ColfType.Float64 => DoubleType
-    case ColfType.Utf8    => StringType
   }
 
   /** Apply inferred types to the raw-string table with reference semantics:

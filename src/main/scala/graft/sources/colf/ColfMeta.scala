@@ -50,14 +50,63 @@ final case class ColfFileRef(path: String, size: Long, mtime: Long,
   * columns, and filters on them prune files EXACTLY (no header I/O at
   * all — the decisive difference from stats pruning at 10⁵⁺ files:
   * a `dt = '2024-01-01'` probe touches only that date's files).
+  *
+  * It also owns the TABLE LAYOUT rule that the reader, the writer and
+  * both commit paths share: a directory is part of the table iff its
+  * name parses as a segment ([[parseSegment]]), and a file is a data
+  * file iff [[isDataFile]]. What one path lists, every other path lists.
   */
 private[graft] object ColfPartitions {
+
+  /** Names the layout never reads: Hadoop `.crc` siblings, in-flight
+    * `.tmp` parts, `_graft_versions` and other `_`-prefixed metadata.
+    */
+  def hidden(name: String): Boolean = name.startsWith(".") || name.startsWith("_")
+
+  def isDataFile(name: String): Boolean = name.endsWith(".colf") && !hidden(name)
+
+  /** A directory name as a partition `(column, value)`: exactly one `=`,
+    * a non-empty key, no leading `.`/`_`. Anything else is not part of
+    * the table — never descended into, never listed.
+    */
+  def parseSegment(name: String): Option[(String, String)] = {
+    val i = name.indexOf('=')
+    if (i <= 0 || name.indexOf('=', i + 1) >= 0 || hidden(name)) None
+    else Some(name.substring(0, i) -> name.substring(i + 1))
+  }
+
+  /** The `k=v` segment the writer creates for one partition value,
+    * validated so [[parseSegment]] reads back exactly `(col, value)` and
+    * Hadoop's `Path` takes it as a plain name (a `:` would parse as a URI
+    * scheme). Empty values and values that start with `.`/`_` or contain
+    * `/`, `=` or `:` fail loudly.
+    */
+  def segment(col: String, value: String): String = {
+    val seg = s"$col=$value"
+    require(value.nonEmpty && !hidden(value) && !seg.exists(c => c == '/' || c == ':') &&
+      parseSegment(seg).contains(col -> value),
+      s"colf partitionBy: value '$value' of column '$col' cannot form " +
+        "a k=v path segment")
+    seg
+  }
 
   /** Partition column names across a listing, in sorted order (path
     * discovery order is nondeterministic; the schema must not be).
     */
   def partitionCols(refs: Seq[ColfFileRef]): Seq[String] =
     refs.flatMap(_.partValues.keys).distinct.sorted
+
+  /** The listing's partition columns as table fields, appended after the
+    * file columns and typed by [[inferType]] over their observed values.
+    * A partition column may not share a name with a file column.
+    */
+  def partitionFields(refs: Seq[ColfFileRef], fileCols: String => Boolean): Seq[ColfField] =
+    partitionCols(refs).map { pc =>
+      require(!fileCols(pc),
+        s"colf: partition directory column '$pc' collides with a file column of " +
+          "the same name")
+      ColfField(pc, inferType(refs.flatMap(_.partValues.get(pc))), nullable = false)
+    }
 
   /** Narrowest COLF type that parses EVERY observed value of a partition
     * column — the format's own inference lattice (int32 ≺ float64 ≺ utf8)
@@ -74,9 +123,10 @@ private[graft] object ColfPartitions {
     case ColfType.Utf8    => raw
   }
 
-  /** Spark-order comparison of a typed partition value `x` against a
-    * filter value `v`. None when the pair is incomparable (unexpected
-    * runtime type) — exactness claims must then be dropped.
+  /** Spark-order comparison of a typed value `x` (a partition value or a
+    * column's stat bound) against a filter value `v`. None when the pair
+    * is incomparable (unexpected runtime type) — exactness claims must
+    * then be dropped and pruning must keep the file.
     *
     * Doubles compare in Spark's SQL order: NaN sorts largest and equals
     * itself (Double.compare already does both), and -0.0 == 0.0 — the
@@ -117,7 +167,7 @@ private[graft] object ColfPartitions {
     f match {
       case And(l, r) => mayMatch(values, l) && mayMatch(values, r)
       case Or(l, r)  => mayMatch(values, l) || mayMatch(values, r)
-      case Not(c)    => !provablyMatchesAll(values, c)
+      case Not(c)    => !evalExact(values, c).contains(true)
       case EqualTo(a, v) if known(a)       => cmp(a, v).forall(_ == 0)
       case EqualNullSafe(a, v) if known(a) => v != null && cmp(a, v).forall(_ == 0)
       case In(a, vs) if known(a) =>
@@ -134,27 +184,6 @@ private[graft] object ColfPartitions {
       }
       case _ => true
     }
-  }
-
-  /** True iff the filter PROVABLY matches every row of the file given
-    * these partition values — partition values are constant per file, so
-    * may-match ⇒ all-match for the equality shapes. Conservative false
-    * whenever unsure. Used for Not-pushdown above and for the DELETE side
-    * of filter-based INSERT OVERWRITE (a file is replaced only when every
-    * row in it provably matches the overwrite condition — anything less
-    * would delete rows the condition never selected).
-    */
-  private[colf] def provablyMatchesAll(values: Map[String, Any], f: Filter): Boolean = f match {
-    case _: org.apache.spark.sql.sources.AlwaysTrue => true
-    case And(l, r) =>
-      provablyMatchesAll(values, l) && provablyMatchesAll(values, r)
-    case EqualTo(a, v) if values.contains(a) =>
-      mayMatch(values, EqualTo(a, v)) // constant per file: may ⇒ all
-    case EqualNullSafe(a, v) if values.contains(a) =>
-      mayMatch(values, EqualNullSafe(a, v))
-    case In(a, vs) if values.contains(a) => mayMatch(values, In(a, vs))
-    case IsNotNull(a) if values.contains(a) => true
-    case _ => false
   }
 
   /** EXACT truth of a filter for a file whose referenced columns all have
@@ -521,33 +550,6 @@ private[graft] object ColfPrune {
 
   private def mayHaveNonNull(h: ColfHeader, a: String): Boolean = !allNull(h, a)
 
-  /** Spark-order comparison of a filter value against a stat bound of the
-    * same column. None when the pair is incomparable (unexpected type) —
-    * callers must then keep the file.
-    */
-  private def cmp(bound: Any, v: Any): Option[Int] = (bound, v) match {
-    case (b: Int, x: Number) => x match {
-      // fractional filter values compare in double space (e.g. i > 44.5
-      // against int bounds — Catalyst usually unwraps such casts, but be
-      // exact if one slips through); integral values compare as longs
-      case _: java.lang.Double | _: java.lang.Float =>
-        Some(java.lang.Double.compare(b.toDouble, x.doubleValue()))
-      case bd: java.math.BigDecimal =>
-        Some(java.math.BigDecimal.valueOf(b.toLong).compareTo(bd))
-      case _ => Some(java.lang.Long.compare(b.toLong, x.longValue()))
-    }
-    case (b: Double, x: Number) =>
-      // normalize both zeros (builder already normalized the bound side)
-      val xv0 = x.doubleValue()
-      val xv = if (xv0 == 0.0d) 0.0d else xv0
-      Some(java.lang.Double.compare(b, xv))
-    case (b: String, x: String) =>
-      Some(UTF8String.fromString(b).compareTo(UTF8String.fromString(x)))
-    case (b: String, x: UTF8String) =>
-      Some(UTF8String.fromString(b).compareTo(x))
-    case _ => None
-  }
-
   /** v ∈ [min, max] as far as the (possibly partial) bounds can tell.
     * A string `min` may be a truncated prefix (≤ true min): v < minT still
     * proves v < trueMin, so the prune direction stays sound.
@@ -567,8 +569,8 @@ private[graft] object ColfPrune {
     stats(h, a) match {
       case None => true
       case Some(st) =>
-        val aboveMin = st.min.forall(mn => cmp(mn, v).forall(_ <= 0))
-        val belowMax = st.max.forall(mx => cmp(mx, v).forall(_ >= 0))
+        val aboveMin = st.min.forall(mn => ColfPartitions.cmpValues(mn, v).forall(_ <= 0))
+        val belowMax = st.max.forall(mx => ColfPartitions.cmpValues(mx, v).forall(_ >= 0))
         aboveMin && belowMax && {
           val i = fieldIdx(h, a)
           i < 0 || bloomAllows(h.schema.fields(i).tpe, st, v)
@@ -630,7 +632,7 @@ private[graft] object ColfPrune {
         val bound = if (useMax) st.max else st.min
         bound match {
           case None => true
-          case Some(b) => cmp(b, v) match {
+          case Some(b) => ColfPartitions.cmpValues(b, v) match {
             case None => true
             case Some(c) =>
               if (useMax) { if (strict) c > 0 else c >= 0 }

@@ -18,9 +18,6 @@ object ColfType {
   def fromName(s: String): ColfType =
     all.find(_.name == s).getOrElse(
       throw new IllegalArgumentException(s"Unknown COLF type name: $s"))
-  def fromCode(c: Int): ColfType =
-    all.find(_.code == c).getOrElse(
-      throw new IllegalArgumentException(s"Unknown COLF type code: $c"))
 }
 
 /** One column in the schema JSON (reference: SPEC.md:25-33). */

@@ -117,9 +117,6 @@ object ColfVersions {
 
     /** Physical (stored) name of logical column `l`. */
     def physicalOf(l: String): String = physical.getOrElse(l, l)
-    /** Logical name of stored column `p` (inverse of [[physicalOf]]). */
-    def logicalOf(p: String): String =
-      physical.collectFirst { case (l, ph) if ph == p => l }.getOrElse(p)
   }
 
   private val mapper = new ObjectMapper()
@@ -876,43 +873,43 @@ object ColfVersions {
   }
 
   /** Manifest entries → fully-resolved [[ColfFileRef]]s, partition values
-    * parsed from the relative path's k=v segments (same single-'=' rule
-    * as the directory walk).
+    * parsed from the relative path's k=v segments
+    * ([[ColfPartitions.parseSegment]]).
     */
   def toRefs(fs: FileSystem, root: Path, entries: Seq[Entry]): Seq[ColfFileRef] = {
     val q = fs.makeQualified(root)
     entries.map { e =>
-      val segs = e.relPath.split('/')
-      val partValues = segs.dropRight(1).toSeq
-        .filter(s => s.count(_ == '=') == 1 && !s.startsWith("=") &&
-          !s.startsWith(".") && !s.startsWith("_"))
-        .map { s => val Array(k, v) = s.split("=", 2); k -> v }
-        .toMap
-      ColfFileRef(new Path(q, e.relPath).toString, e.size, e.mtime, partValues,
+      ColfFileRef(new Path(q, e.relPath).toString, e.size, e.mtime,
+        e.relPath.split('/').dropRight(1).flatMap(ColfPartitions.parseSegment).toMap,
         e.schema, e.numRows, e.stats,
         if (e.dv == null) null else new Path(q, e.dv).toString, e.dvRows)
     }
   }
 
-  /** The raw on-disk data files under `root` (the listing walk, ignoring
-    * manifests) — what the table would look like WITHOUT versioning.
-    * Used to seed the first manifest and by compaction's before/after
-    * diff.
+  /** The raw on-disk data files under `root` (ignoring manifests) — what
+    * the table would look like WITHOUT versioning, and exactly what an
+    * unversioned read lists. Used to seed the first manifest, by the
+    * unversioned commit's replaced-file scope, and by compaction's
+    * before/after diff.
     */
-  def listDataFiles(fs: FileSystem, root: Path): Seq[Entry] = {
-    def walk(dir: Path, prefix: String): Seq[Entry] = {
+  def listDataFiles(fs: FileSystem, root: Path): Seq[Entry] =
+    walk(fs, root)(ColfPartitions.isDataFile)
+
+  /** Files named `keep` under `root`, descending only into directories
+    * the table layout owns ([[ColfPartitions.parseSegment]]), in name
+    * order (a directory's files before its subdirectories).
+    */
+  private[colf] def walk(fs: FileSystem, root: Path)(keep: String => Boolean): Seq[Entry] = {
+    def go(dir: Path, prefix: String): Seq[Entry] = {
       val entries = fs.listStatus(dir).toSeq.sortBy(_.getPath.getName)
-      val here = entries
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".colf") &&
-          !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+      val here = entries.filter(s => s.isFile && keep(s.getPath.getName))
         .map(s => Entry(prefix + s.getPath.getName, s.getLen, s.getModificationTime))
       val below = entries
-        .filter(s => s.isDirectory && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith(".") && s.getPath.getName.count(_ == '=') == 1)
-        .flatMap(s => walk(s.getPath, prefix + s.getPath.getName + "/"))
+        .filter(s => s.isDirectory && ColfPartitions.parseSegment(s.getPath.getName).isDefined)
+        .flatMap(s => go(s.getPath, prefix + s.getPath.getName + "/"))
       here ++ below
     }
-    if (!fs.exists(root)) Seq.empty else walk(root, "")
+    if (!fs.exists(root)) Seq.empty else go(root, "")
   }
 
   /** Stage commit properties for the NEXT manifest commit on `root`

@@ -344,7 +344,7 @@ class ColfWrite(dir: String, schema: StructType, queryId: String, truncate: Bool
               "mergeSchema 'true' to the DDL table's OPTIONS) so the rewrite " +
               "carries every column")
       }
-      scanned.map(r => fs.makeQualified(new Path(r.path))).toSet
+      scanned.map(r => ColfVersions.relativize(fs, dirPath, new Path(r.path))).toSet
     }
     // 1) Rename every temp into place — IN PARALLEL: a serial rename loop
     //    is the driver's commit wall-clock at 10⁵ part files on a remote
@@ -369,14 +369,10 @@ class ColfWrite(dir: String, schema: StructType, queryId: String, truncate: Bool
         throw new java.io.IOException(s"colf commit: rename $src -> $dst failed")
     }
     val versioned = manifestOpt || ColfVersions.enabled(fs, dirPath)
-    rowLevelReplacedRel =
-      rowLevelReplaced.map(_.map(p => ColfVersions.relativize(fs, dirPath, p)))
+    touchedRelDirs = pairs.map { case (_, fin) =>
+      relDir(ColfVersions.relativize(fs, dirPath, new Path(fin)))
+    }.toSet
     if (versioned && !skipManifest) {
-      val rootAbs = fs.makeQualified(dirPath).toUri.getPath.stripSuffix("/")
-      touchedRelDirs = pairs.map { case (_, fin) =>
-        val p = fs.makeQualified(new Path(fin).getParent).toUri.getPath
-        if (p == rootAbs) "" else p.stripPrefix(rootAbs + "/")
-      }.toSet
       // Snapshot versioning (ColfVersions): append the next manifest as
       // the commit's visibility switch. Replaced files are NOT deleted —
       // they back earlier versions until vacuumVersions reclaims them —
@@ -393,7 +389,7 @@ class ColfWrite(dir: String, schema: StructType, queryId: String, truncate: Bool
         // updates half-applied. First committer wins; the loser aborts
         // loudly (its renamed files are unreferenced by any manifest,
         // invisible to readers, and vacuumable).
-        rowLevelReplacedRel.foreach { rel =>
+        rowLevelReplaced.foreach { rel =>
           val live = prev.map(_.relPath).toSet
           val gone = rel.diff(live)
           if (gone.nonEmpty)
@@ -405,8 +401,7 @@ class ColfWrite(dir: String, schema: StructType, queryId: String, truncate: Bool
                 "; re-run the operation against the new table state")
         }
         val survivors = prev.filterNot { e =>
-          val name = e.relPath.split('/').last
-          newNames.contains(name) || isReplaced(dirPath, e)
+          newNames.contains(e.relPath.split('/').last) || isReplaced(fs, dirPath, e)
         }
         survivors ++ committedEntries(fs, dirPath, pairs, facts)
       }
@@ -434,92 +429,64 @@ class ColfWrite(dir: String, schema: StructType, queryId: String, truncate: Bool
       // 2) Deferred deletes LAST (unversioned tables): a crash anywhere
       //    above leaves old data fully intact (plus invisible temps / some
       //    new files) — a superset, never a partial table. Deletes are
-      //    parallel for the same reason renames are. The walk descends
-      //    k=v partition dirs. Scope:
-      //    - truncate: every old file (full overwrite);
-      //    - dynamic overwrite: old files only in partition dirs that
-      //      RECEIVED new files this commit;
-      //    - filter overwrite: old files whose partition-path values
-      //      PROVABLY satisfy the condition (constant per directory — a
-      //      file is never deleted on a maybe).
-      val old = walkFiles(fs, dirPath).filter { p =>
-        val n = p.getName
-        n.endsWith(".colf") && !n.startsWith(".") && !n.startsWith("_") &&
-          !committed.contains(n)
+      //    parallel for the same reason renames are. The old files are
+      //    exactly what a read lists, and [[isReplaced]] scopes them just
+      //    as it scopes a versioned commit's previous manifest.
+      val old = ColfVersions.listDataFiles(fs, dirPath)
+        .filterNot(e => committed.contains(e.relPath.split('/').last))
+      // best-effort conflict check (unversioned tables have no atomic
+      // validation point — versioning is the real guarantee): every file
+      // this op read-and-rewrote must still exist at delete time, else a
+      // concurrent commit already replaced it and publishing both copies
+      // would duplicate rows
+      rowLevelReplaced.foreach { rel =>
+        val gone = rel.diff(old.map(_.relPath).toSet)
+        if (gone.nonEmpty)
+          throw new java.util.ConcurrentModificationException(
+            s"colf: row-level commit conflict at $dir — file(s) this " +
+              s"operation read and rewrote no longer exist: " +
+              s"${gone.take(5).mkString(", ")}; enable versioning " +
+              "(option(\"manifest\",\"true\")) for atomic conflict detection")
       }
-      val stale =
-        if (rowLevelReplaced.isDefined) {
-          val replaced = rowLevelReplaced.get
-          // best-effort conflict check (unversioned tables have no
-          // atomic validation point — versioning is the real guarantee):
-          // every file this op read-and-rewrote must still exist at
-          // delete time, else a concurrent commit already replaced it
-          // and publishing both copies would duplicate rows
-          val present = old.map(fs.makeQualified).toSet
-          val gone = replaced.diff(present)
-          if (gone.nonEmpty)
-            throw new java.util.ConcurrentModificationException(
-              s"colf: row-level commit conflict at $dir — file(s) this " +
-                s"operation read and rewrote no longer exist: " +
-                s"${gone.take(5).mkString(", ")}; enable versioning " +
-                "(option(\"manifest\",\"true\")) for atomic conflict detection")
-          old.filter(p => replaced.contains(fs.makeQualified(p)))
-        } else if (truncate) old
-        else if (dynamicOverwrite) {
-          val touchedDirs = pairs.map { case (_, fin) => new Path(fin).getParent.toString }.toSet
-          old.filter(p => touchedDirs.contains(p.getParent.toString))
-        } else {
-          old.filter { p =>
-            val typed = typedPartValues(dirPath, p)
-            overwriteFilters.forall(ColfPartitions.provablyMatchesAll(typed, _))
-          }
-        }
-      ColfHeaderCache.mapParallel(stale)(p => fs.delete(p, false))
+      ColfHeaderCache.mapParallel(old.filter(isReplaced(fs, dirPath, _)))(e =>
+        fs.delete(new Path(dirPath, e.relPath), false))
     }
     deleteQueryTemps(fs)
   }
 
-  /** Is a previous-version entry logically REPLACED by this commit (the
-    * manifest-mode analogue of the unversioned deferred-delete scope)?
+  /** Is an old file (a previous-version entry, or a listed file of an
+    * unversioned table) REPLACED by this commit? Scope:
+    *  - row-level: exactly the scanned groups, nothing else;
+    *  - truncate: every old file (full overwrite);
+    *  - dynamic overwrite: old files only in partition dirs that
+    *    RECEIVED new files this commit;
+    *  - filter overwrite: old files whose partition-path values PROVABLY
+    *    satisfy the condition (constant per directory — a file is never
+    *    replaced on a maybe).
     */
-  private def isReplaced(root: Path, e: ColfVersions.Entry): Boolean = {
-    // row-level replacement: exactly the scanned groups, nothing else
-    rowLevelReplacedRel match {
-      case Some(rel) => return rel.contains(e.relPath)
-      case None      => ()
-    }
-    if (truncate) return true
-    if (!dynamicOverwrite && overwriteFilters.isEmpty) return false
-    val relDir = e.relPath.split('/').dropRight(1).mkString("/")
-    if (dynamicOverwrite) touchedRelDirs.contains(relDir)
-    else {
-      val typed = typedFromRel(e.relPath)
-      overwriteFilters.forall(ColfPartitions.provablyMatchesAll(typed, _))
-    }
+  private def isReplaced(fs: org.apache.hadoop.fs.FileSystem, root: Path,
+      e: ColfVersions.Entry): Boolean = rowLevelReplaced match {
+    case Some(rel) => rel.contains(e.relPath)
+    case None =>
+      if (truncate) true
+      else if (dynamicOverwrite) touchedRelDirs.contains(relDir(e.relPath))
+      else overwriteFilters.nonEmpty && {
+        val typed = ColfUtil.typedPartValues(ColfVersions.toRefs(fs, root, Seq(e)).head, schema)
+        overwriteFilters.forall(ColfPartitions.evalExact(typed, _).contains(true))
+      }
   }
+
+  private def relDir(relPath: String): String =
+    relPath.split('/').dropRight(1).mkString("/")
 
   /** This commit's target partition dirs, relative to the table root. */
   private var touchedRelDirs: Set[String] = Set.empty
 
-  /** Row-level mode: the scanned (= replaced) files, absolute + relative.
-    * None = not a row-level write; Some(empty) = a row-level op whose
-    * scan planned nothing (nothing replaced, new rows appended).
+  /** Row-level mode: the scanned (= replaced) files, relative to the
+    * table root. None = not a row-level write; Some(empty) = a row-level
+    * op whose scan planned nothing (nothing replaced, new rows appended).
     */
-  private var rowLevelReplaced: Option[Set[Path]] = None
-  private var rowLevelReplacedRel: Option[Set[String]] = None
-
-  /** Typed partition values from a manifest entry's relative path. */
-  private def typedFromRel(relPath: String): Map[String, Any] =
-    relPath.split('/').dropRight(1).toSeq
-      .filter(_.count(_ == '=') == 1)
-      .flatMap { s =>
-        val Array(k, v) = s.split("=", 2)
-        schema.fields.find(_.name.equalsIgnoreCase(k)).flatMap { f =>
-          scala.util.Try(
-            ColfPartitions.typedValue(v, ColfUtil.colfType(f.dataType))).toOption
-            .map(f.name -> _)
-        }
-      }.toMap
+  private var rowLevelReplaced: Option[Set[String]] = None
 
   /** Manifest entries for the files this commit renamed into place (one
     * parallel status batch for sizes/mtimes). Each entry records its file
@@ -542,39 +509,6 @@ class ColfWrite(dir: String, schema: StructType, queryId: String, truncate: Bool
         st.getModificationTime, fileFields,
         f.map(_.numRows).getOrElse(-1L), f.map(_.stats).orNull)
     }
-  }
-
-  /** All files under `dir`, descending into `k=v` partition subdirs
-    * (hidden/underscore dirs skipped) — mirrors the reader's listing.
-    */
-  private def walkFiles(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[Path] = {
-    val entries = fs.listStatus(dir).toSeq
-    entries.filter(_.isFile).map(_.getPath) ++
-      entries.filter(s => s.isDirectory && !s.getPath.getName.startsWith(".") &&
-        !s.getPath.getName.startsWith("_") && s.getPath.getName.contains('='))
-        .flatMap(s => walkFiles(fs, s.getPath))
-  }
-
-  /** Typed partition values from the `k=v` path segments between the table
-    * root and `file`, typed by the write schema (mirrors the scan side's
-    * typedPartValues so overwrite filters compare ints as ints).
-    */
-  private def typedPartValues(root: Path, file: Path): Map[String, Any] = {
-    var p = file.getParent
-    var segs = List.empty[(String, String)]
-    while (p != null && p.toString != root.toString) {
-      val n = p.getName
-      val i = n.indexOf('=')
-      if (i > 0) segs ::= (n.substring(0, i), n.substring(i + 1))
-      p = p.getParent
-    }
-    segs.flatMap { case (k, v) =>
-      schema.fields.find(_.name.equalsIgnoreCase(k)).flatMap { f =>
-        scala.util.Try(
-          ColfPartitions.typedValue(v, ColfUtil.colfType(f.dataType))).toOption
-          .map(f.name -> _)
-      }
-    }.toMap
   }
 
   private def doAbort(messages: Array[WriterCommitMessage]): Unit = {
@@ -605,11 +539,9 @@ class ColfWrite(dir: String, schema: StructType, queryId: String, truncate: Bool
     */
   private def deleteQueryTemps(fs: org.apache.hadoop.fs.FileSystem): Unit = {
     val dirPath = new Path(dir)
-    if (fs.exists(dirPath)) walkFiles(fs, dirPath).foreach { p =>
-      val n = p.getName
-      if (n.startsWith(".") && n.contains(queryId) && n.endsWith(".colf.tmp"))
-        fs.delete(p, false)
-    }
+    ColfVersions.walk(fs, dirPath)(n =>
+      n.startsWith(".") && n.contains(queryId) && n.endsWith(".colf.tmp"))
+      .foreach(e => fs.delete(new Path(dirPath, e.relPath), false))
   }
 }
 
@@ -668,7 +600,9 @@ class ColfDataWriter(
   private var fileSeq = 0
   // Rows arrive ordered by the partition columns (requiredOrdering), so
   // one partition value is active at a time — a value change flushes.
+  // `currentDir` is its validated `k=v/...` path under `dir`.
   private var currentPart: Seq[String] = null
+  private var currentDir: String = null
   // (temp, final, captured facts), newest first
   private var written = List.empty[(Path, Path, ColfFileFacts)]
 
@@ -678,16 +612,11 @@ class ColfDataWriter(
       require(!record.isNullAt(p),
         s"colf partitionBy: null value in partition column '${partitionBy(i)}' " +
           "(hive-layout paths cannot encode null)")
-      val v = partTypes(i) match {
+      partTypes(i) match {
         case org.apache.spark.sql.types.IntegerType => record.getInt(p).toString
         case org.apache.spark.sql.types.DoubleType  => record.getDouble(p).toString
         case _ => record.getUTF8String(p).toString
       }
-      require(v.nonEmpty && !v.contains('/') && !v.contains('=') &&
-        !v.startsWith(".") && !v.startsWith("_"),
-        s"colf partitionBy: value '$v' of column '${partitionBy(i)}' cannot form " +
-          "a k=v path segment")
-      v
     }
 
   private def freshBuilders(): IndexedSeq[ColfCodec.ColumnBuilder] =
@@ -703,9 +632,11 @@ class ColfDataWriter(
   override def write(record: InternalRow): Unit = {
     if (partPos.nonEmpty) {
       val vals = renderPartValues(record)
-      if (currentPart == null) currentPart = vals
-      else if (currentPart != vals) {
-        if (builders.head.count > 0) { flushFile(); builders = freshBuilders() }
+      if (currentPart != vals) {
+        if (currentPart != null && builders.head.count > 0) {
+          flushFile(); builders = freshBuilders()
+        }
+        currentDir = partitionBy.lazyZip(vals).map(ColfPartitions.segment).mkString("/")
         currentPart = vals
       }
     }
@@ -733,10 +664,7 @@ class ColfDataWriter(
     */
   private def flushFile(): Unit = {
     val e = epoch.map(id => s"e$id-").getOrElse("")
-    val outDir =
-      if (partPos.isEmpty || currentPart == null) new Path(dir)
-      else new Path(dir, partitionBy.zip(currentPart)
-        .map { case (k, v) => s"$k=$v" }.mkString("/"))
+    val outDir = if (currentDir == null) new Path(dir) else new Path(dir, currentDir)
     val fin = new Path(outDir, f"part-$e$partitionId%05d-$fileSeq%03d-$queryId.colf")
     val tmp = new Path(outDir, f".part-$e$partitionId%05d-$fileSeq%03d-$queryId-$taskId.colf.tmp")
     fileSeq += 1

@@ -178,7 +178,11 @@ object ColfEvalExactProps extends Properties("ColfEvalExact") {
     val nullSafeDecides =
       ColfPartitions.evalExact(Map("p_i" -> 1), EqualNullSafe("p_i", null)).contains(false) &&
         ColfPartitions.exactShape(EqualNullSafe("p_i", null), partCols, schema)
-    Prop(rejectedAndUndecided && matchDominates && nullSafeDecides) :|
-      s"rejected=$rejectedAndUndecided match=$matchDominates nullSafe=$nullSafeDecides"
+    // An incomparable pair is not a match, so its negation cannot prune.
+    val notIncomparableKeeps =
+      ColfPartitions.mayMatch(Map("p_i" -> 1), Not(EqualTo("p_i", "x")))
+    Prop(rejectedAndUndecided && matchDominates && nullSafeDecides && notIncomparableKeeps) :|
+      s"rejected=$rejectedAndUndecided match=$matchDominates nullSafe=$nullSafeDecides " +
+        s"notIncomparable=$notIncomparableKeeps"
   }
 }

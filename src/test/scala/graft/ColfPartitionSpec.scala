@@ -150,6 +150,40 @@ class ColfPartitionSpec extends AnyFunSuite {
         .write.format("colf").option("partitionBy", "p").mode("overwrite").save(tmp())
     }
     assert(e3.getMessage.contains("path segment") || e3.getCause != null)
+    // `p=10:00` would parse as a URI scheme in Hadoop's Path
+    val e4 = intercept[Exception] {
+      Seq((1, "10:00")).toDF("k", "p")
+        .write.format("colf").option("partitionBy", "p").mode("overwrite").save(tmp())
+    }
+    assert(e4.getMessage.contains("path segment"), e4.getMessage)
+  }
+
+  test("files outside the k=v layout are never read, seeded or deleted") {
+    // `=x/` (empty key) and `q=a=b/` (two '=') are not partition
+    // directories: a read skips them, so neither the first manifest nor
+    // an overwrite may take them in
+    def plantedTable(): (String, Seq[java.nio.file.Path]) = {
+      val dir = tmp()
+      Seq((1, 1), (2, 1), (3, 2)).toDF("k", "p")
+        .write.format("colf").option("partitionBy", "p").mode("overwrite").save(dir)
+      val src = colfFiles(dir + "/p=1").head.toPath
+      dir -> Seq("=x", "q=a=b").map { d =>
+        val to = java.nio.file.Paths.get(dir, d, src.getFileName.toString)
+        Files.createDirectories(to.getParent)
+        Files.copy(src, to)
+      }
+    }
+    val (dir, _) = plantedTable()
+    assert(spark.read.format("colf").load(dir).count() == 3)
+    Seq((4, 2)).toDF("k", "p").write.format("colf").option("partitionBy", "p")
+      .option("manifest", "true").mode("append").save(dir)
+    assert(spark.read.format("colf").load(dir).count() == 4)
+
+    val (flat, planted) = plantedTable()
+    Seq((5, 1)).toDF("k", "p").write.format("colf").option("partitionBy", "p")
+      .mode("overwrite").save(flat)
+    assert(spark.read.format("colf").load(flat).count() == 1)
+    planted.foreach(f => assert(Files.exists(f), s"overwrite deleted $f outside the table layout"))
   }
 
   test("INSERT OVERWRITE PARTITION replaces exactly the named partition") {

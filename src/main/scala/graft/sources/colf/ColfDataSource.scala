@@ -96,35 +96,12 @@ class ColfDataSource extends TableProvider with DataSourceRegister {
     }
     if (options.getBoolean("mergeSchema", false)) {
       // Schema evolution across a directory written over time: the table
-      // schema is the ORDERED UNION of every file's fields (first
-      // appearance wins the position); a column absent from some files is
-      // nullable (those files read it as all-null). Same-name different-
-      // type conflicts still fail here, loudly. Headers come through the
-      // parallel cache — a wide merge costs one batched fetch, not
-      // files.length sequential round trips.
-      val fields = scala.collection.mutable.LinkedHashMap.empty[String, ColfField]
-      val presentIn = scala.collection.mutable.Map.empty[String, Int]
-      files.lazyZip(fieldsOf(files)).foreach { (ref, flds) =>
-        flds.foreach { fld =>
-          fields.get(fld.name) match {
-            case Some(prev) if prev.tpe != fld.tpe =>
-              // name the culprit — at 10⁵ files "in another file" is
-              // undiagnosable
-              throw new IllegalArgumentException(
-                s"colf mergeSchema: column '${fld.name}' is ${prev.tpe.name} in one file " +
-                  s"but ${fld.tpe.name} in ${ref.path}; types cannot be merged")
-            case Some(prev) =>
-              fields(fld.name) = prev.copy(nullable = prev.nullable || fld.nullable)
-            case None =>
-              fields(fld.name) = fld
-          }
-          presentIn(fld.name) = presentIn.getOrElse(fld.name, 0) + 1
-        }
-      }
-      val merged = fields.values.toIndexedSeq.map { f =>
-        if (presentIn(f.name) < files.length) f.copy(nullable = true) else f
-      }
-      ColfUtil.sparkSchema(merged)
+      // schema is the ordered union of every file's fields
+      // ([[ColfSchema.union]]). Headers come through the parallel cache —
+      // a wide merge costs one batched fetch, not files.length sequential
+      // round trips.
+      ColfUtil.sparkSchema(ColfSchema.union("colf mergeSchema",
+        files.map(_.path).zip(fieldsOf(files))))
     } else {
       ColfUtil.sparkSchema(fieldsOf(files.take(1)).head)
     }
@@ -350,30 +327,46 @@ private[colf] object ColfUtil {
     ArraySeq.unsafeWrapArray(
       s.fields.map(f => ColfField(f.name, colfType(f.dataType), f.nullable)))
 
-  /** Bin-pack files into partitions by compressed size (first-fit over a
-    * size-descending order), targeting `spark.sql.files.maxPartitionBytes`
-    * — the same policy as Spark's file sources. One-task-per-file would
-    * explode the task count on directories of many small part files (the
-    * normal shape of a large rolled write); packing keeps task count
-    * proportional to bytes, not file count. A file is never split: it is
-    * the format's unit of decompression. Sizes ride in from the original
-    * directory listing — zero per-file FS calls here.
+  /** Pack files into scan partitions the way Spark's file sources size a
+    * scan, without ever splitting a file (it is the format's unit of
+    * decompression and of read parallelism). Each file costs
+    * `size + spark.sql.files.openCostInBytes`; the bin count is
+    * `k = min(#files, max(P, ceil(Σcost / spark.sql.files.maxPartitionBytes)))`
+    * where `P` is `spark.sql.files.minPartitionNum`, or else the
+    * session's leaf-node default parallelism — the inputs of Spark's
+    * `FilePartition.maxSplitBytes`. Files go largest first into the
+    * least-loaded bin, so a small table spreads over the session's cores
+    * in one wave instead of packing into one task, and a large one still
+    * gets about one task per `maxPartitionBytes`. Sizes ride in from the
+    * original directory listing — zero per-file FS calls here.
+    *
+    * `spread = false` sets `P = 1`: a copy-on-write rewrite scan's
+    * partitions become its output files, so spreading it would multiply
+    * the files (and manifest entries) every UPDATE/MERGE leaves behind.
+    *
+    * Runs on the driver under the planning session; there is no
+    * fallback for a missing session (the old catch-all default is gone).
     */
-  def binPack(refs: Seq[ColfFileRef]): Array[InputPartition] = {
-    val maxBytes: Long =
-      try org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
-      catch { case _: Throwable => 128L * 1024 * 1024 }
+  def binPack(refs: Seq[ColfFileRef], spread: Boolean = true): Array[InputPartition] = {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val maxBytes = conf.filesMaxPartitionBytes
+    val openCost = conf.filesOpenCostInBytes
+    val p = if (spread) GraftSqlBridge.filesMinPartitionNum(SparkSession.active) else 1
+    val total = refs.iterator.map(_.size + openCost).sum
+    val k = math.min(refs.length.toLong, math.max(p.toLong, (total + maxBytes - 1) / maxBytes)).toInt
     // Files with and without a deletion vector share bins: the columnar
     // reader applies a vector per file, as a row selection.
-    val bins = scala.collection.mutable.ArrayBuffer
-      .empty[(scala.collection.mutable.ArrayBuffer[ColfFileRef], Long)]
+    val bins = Array.fill(k)(scala.collection.mutable.ArrayBuffer.empty[ColfFileRef])
+    // least load first, ties to the lowest bin
+    val open = scala.collection.mutable.PriorityQueue.empty[(Long, Int)](
+      Ordering.Tuple2[Long, Int].reverse)
+    bins.indices.foreach(i => open.enqueue((0L, i)))
     refs.sortBy(-_.size).foreach { r =>
-      bins.indexWhere(_._2 + r.size <= maxBytes) match {
-        case -1 => bins += ((scala.collection.mutable.ArrayBuffer(r), r.size))
-        case i  => val (fs0, total) = bins(i); fs0 += r; bins(i) = (fs0, total + r.size)
-      }
+      val (load, i) = open.dequeue()
+      bins(i) += r
+      open.enqueue((load + r.size + openCost, i))
     }
-    bins.map { case (fs0, _) => ColfInputPartition.of(fs0.toSeq): InputPartition }.toArray
+    bins.map(fs0 => ColfInputPartition.of(fs0.toSeq): InputPartition)
   }
 }
 
@@ -1230,8 +1223,9 @@ class ColfScan(paths: Seq[String], fullSchema: StructType, required: StructType,
         spjGroups.length)
     else new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
 
-  /** Size-based first-fit bin-packing — see [[ColfUtil.binPack]] — or,
-    * under SPJ, one key-tagged partition per partition-value tuple.
+  /** Size-balanced bin-packing over the session's cores — see
+    * [[ColfUtil.binPack]] — or, under SPJ, one key-tagged partition per
+    * partition-value tuple.
     */
   override def planInputPartitions(): Array[InputPartition] = {
     if (cdf)

@@ -55,12 +55,11 @@ private[colf] object ColfDdl {
   }
 
   /** First declaration of a table never CREATEd through DDL: adopt the
-    * union of live file schemas (first-appearance order, absent-in-some
-    * ⇒ nullable — the exact rule mergeSchema reads already resolve
-    * with, so adoption never changes what a query returns) plus the
-    * layout partition columns typed from their observed values. From
-    * here on the declaration is authoritative and evolves only through
-    * ALTER.
+    * union of live file schemas ([[ColfSchema.union]] — the exact rule
+    * mergeSchema reads resolve with, so adoption never changes what a
+    * query returns) plus the layout partition columns typed from their
+    * observed values. From here on the declaration is authoritative and
+    * evolves only through ALTER.
     */
   def adoptMeta(fs: FileSystem, root: Path, entries: Seq[Entry]): TableMeta = {
     val conf = ColfUtil.driverHadoopConf()
@@ -69,29 +68,11 @@ private[colf] object ColfDdl {
     require(stillNull.isEmpty,
       s"colf: cannot adopt a declared schema for $root — unreadable file " +
         s"header(s): ${stillNull.take(3).map(_.relPath).mkString(", ")}")
-    val fields = scala.collection.mutable.LinkedHashMap.empty[String, ColfField]
-    val presentIn = scala.collection.mutable.Map.empty[String, Int]
-    recorded.foreach { e =>
-      e.schema.foreach { fld =>
-        fields.get(fld.name) match {
-          case Some(prev) if prev.tpe != fld.tpe =>
-            throw new IllegalArgumentException(
-              s"colf: cannot adopt a declared schema for $root — column " +
-                s"'${fld.name}' is ${prev.tpe.name} in one file but " +
-                s"${fld.tpe.name} in ${e.relPath}")
-          case Some(prev) =>
-            fields(fld.name) = prev.copy(nullable = prev.nullable || fld.nullable)
-          case None =>
-            fields(fld.name) = fld
-        }
-        presentIn(fld.name) = presentIn.getOrElse(fld.name, 0) + 1
-      }
-    }
-    val data = fields.values.toIndexedSeq.map { f =>
-      if (presentIn(f.name) < recorded.length) f.copy(nullable = true) else f
-    }
+    val data = ColfSchema.union(s"colf: cannot adopt a declared schema for $root",
+      recorded.map(e => e.relPath -> e.schema))
+    val dataNames = data.map(_.name).toSet
     val partFields =
-      ColfPartitions.partitionFields(ColfVersions.toRefs(fs, root, entries), fields.contains)
+      ColfPartitions.partitionFields(ColfVersions.toRefs(fs, root, entries), dataNames)
     TableMeta(data ++ partFields, partFields.map(_.name))
   }
 

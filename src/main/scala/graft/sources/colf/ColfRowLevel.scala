@@ -127,7 +127,8 @@ private[colf] class ColfRowLevelScan(op: ColfRowLevelOperation,
   override def planInputPartitions(): Array[org.apache.spark.sql.connector.read.InputPartition] = {
     val refs = plannedRefs
     op.scannedRefs = refs
-    ColfUtil.binPack(refs)
+    // packed, not spread: each partition becomes one rewritten file
+    ColfUtil.binPack(refs, spread = false)
   }
 
   override def description(): String =

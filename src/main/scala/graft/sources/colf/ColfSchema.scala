@@ -219,6 +219,36 @@ object ColfSchema {
     case other => throw new IllegalArgumentException(s"unsupported stat type: $other")
   }
 
+  /** The ordered union of per-file schemas, `(file, fields)` in listing
+    * order — the one rule mergeSchema reads and first-declaration
+    * adoption share: the first appearance of a name wins its position; a
+    * column absent from some file is nullable (that file reads it as
+    * all-null); a same-name type conflict fails, naming both files — at
+    * 10⁵ files "another file" is undiagnosable. `what` prefixes the error.
+    */
+  def union(what: String, files: Seq[(String, Seq[ColfField])]): IndexedSeq[ColfField] = {
+    val fields = scala.collection.mutable.LinkedHashMap.empty[String, (ColfField, String)]
+    val presentIn = scala.collection.mutable.Map.empty[String, Int]
+    files.foreach { case (file, flds) =>
+      flds.foreach { fld =>
+        fields.get(fld.name) match {
+          case Some((prev, first)) if prev.tpe != fld.tpe =>
+            throw new IllegalArgumentException(
+              s"$what: column '${fld.name}' is ${prev.tpe.name} in $first but " +
+                s"${fld.tpe.name} in $file; types cannot be merged")
+          case Some((prev, first)) =>
+            fields(fld.name) = (prev.copy(nullable = prev.nullable || fld.nullable), first)
+          case None =>
+            fields(fld.name) = (fld, file)
+        }
+        presentIn(fld.name) = presentIn.getOrElse(fld.name, 0) + 1
+      }
+    }
+    fields.values.toIndexedSeq.map { case (f, _) =>
+      if (presentIn(f.name) < files.length) f.copy(nullable = true) else f
+    }
+  }
+
   def fromJson(json: String): ColfSchema = {
     val root: JsonNode = mapper.readTree(json)
     val numRows = root.get("num_rows").asLong()

@@ -58,6 +58,15 @@ object GraftSqlBridge {
   def filesMaxPartitionBytes(spark: SparkSession): Long =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf.filesMaxPartitionBytes
 
+  /** The scan width Spark's own file sources aim for
+    * (`FilePartition.maxSplitBytes`): `spark.sql.files.minPartitionNum`,
+    * or else the session's leaf-node default parallelism (`private[sql]`).
+    */
+  def filesMinPartitionNum(spark: SparkSession): Int = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    s.sessionState.conf.filesMinPartitionNum.getOrElse(s.leafNodeDefaultParallelism)
+  }
+
   /** The session's Hadoop conf WITH session-level `spark.hadoop.*` /
     * `fs.*` overrides applied — `sessionState` is `private[sql]` in
     * Spark 4, so connectors can't call `newHadoopConf()` directly.

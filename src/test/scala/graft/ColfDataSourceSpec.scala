@@ -215,6 +215,21 @@ class ColfDataSourceSpec extends AnyFunSuite {
     }
   }
 
+  test("mergeSchema: a type conflict names both files") {
+    val dir = tmp()
+    Seq((1, "x")).toDF("k", "v").write.format("colf").mode("overwrite").save(dir)
+    Seq((1.5, "y")).toDF("k", "v").write.format("colf").mode("append").save(dir)
+    val names = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(n => n.endsWith(".colf") && !n.startsWith("."))
+    assert(names.length == 2)
+    val err = intercept[IllegalArgumentException] {
+      spark.read.format("colf").option("mergeSchema", "true").load(dir)
+    }
+    assert(err.getMessage.startsWith("colf mergeSchema: column 'k' is "), err.getMessage)
+    assert(err.getMessage.contains("int32") && err.getMessage.contains("float64"), err.getMessage)
+    names.foreach(n => assert(err.getMessage.contains(n), err.getMessage))
+  }
+
   test("mixed-schema directory fails with a clear per-file type error") {
     val dir = tmp()
     Seq((1, "x")).toDF("k", "v").write.format("colf").mode("overwrite").save(dir)
@@ -289,16 +304,36 @@ class ColfDataSourceSpec extends AnyFunSuite {
     assert(msgs(err).exists(_.contains("compressionLevel")))
   }
 
-  test("small files bin-pack into partitions by maxPartitionBytes") {
+  /** Files per scan partition, read through the `_file` metadata column. */
+  private def filesPerPartition(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+    df.select("_file").rdd
+      .mapPartitions(it => Iterator(it.map(_.getString(0)).toSet.size))
+      .collect().toSeq.sorted.reverse
+
+  private def writeIntFiles(n: Int): String = {
     val dir = tmp()
-    spark.range(1000).select($"id".cast("int").as("a"))
+    spark.range(n * 100).select($"id".cast("int").as("a"))
       .coalesce(1)
       .write.format("colf").option("maxRowsPerFile", "100").mode("overwrite").save(dir)
     val nFiles = new java.io.File(dir).listFiles()
       .count(f => f.getName.endsWith(".colf") && !f.getName.startsWith("."))
-    assert(nFiles == 10)
-    // default 128MB target: ten tiny files pack into ONE task
-    assert(spark.read.format("colf").load(dir).rdd.getNumPartitions == 1)
+    assert(nFiles == n)
+    dir
+  }
+
+  test("small files bin-pack into partitions by maxPartitionBytes") {
+    // each file costs size + openCostInBytes (4 MB); P is minPartitionNum,
+    // else the leaf-node default parallelism; largest first into the
+    // least-loaded bin
+    val dir = writeIntFiles(10)
+    withSQLConf("spark.sql.files.minPartitionNum" -> "4") {
+      val df = spark.read.format("colf").load(dir)
+      assert(df.rdd.getNumPartitions == 4)
+      assert(filesPerPartition(df) == Seq(3, 3, 2, 2))
+    }
+    // the default P is the session's parallelism (local[4] here)
+    assert(spark.read.format("colf").load(dir).rdd.getNumPartitions ==
+      math.min(10, spark.sparkContext.defaultParallelism))
     // a ~1-file-sized target: one task per file, data intact either way
     val fileLen = new java.io.File(dir).listFiles()
       .filter(f => f.getName.endsWith(".colf") && !f.getName.startsWith(".")).map(_.length).max
@@ -306,6 +341,16 @@ class ColfDataSourceSpec extends AnyFunSuite {
       val back = spark.read.format("colf").load(dir)
       assert(back.rdd.getNumPartitions == 10)
       assert(back.agg(sum($"a")).collect()(0).getLong(0) == (0L until 1000L).sum)
+    }
+  }
+
+  test("32 equal files spread over 4 bins of 8") {
+    val dir = writeIntFiles(32)
+    withSQLConf("spark.sql.files.minPartitionNum" -> "4") {
+      val df = spark.read.format("colf").load(dir)
+      assert(df.rdd.getNumPartitions == 4)
+      assert(filesPerPartition(df) == Seq(8, 8, 8, 8))
+      assert(df.agg(sum($"a")).collect()(0).getLong(0) == (0L until 3200L).sum)
     }
   }
 

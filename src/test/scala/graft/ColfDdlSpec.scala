@@ -267,6 +267,30 @@ class ColfDdlSpec extends AnyFunSuite {
       == Seq("k", "v", "extra", "seg", "score"))
   }
 
+  test("ALTER adoption: a type conflict between live files names both files") {
+    val dir = tmp() + "/t"
+    Seq((1, "a")).toDF("k", "v")
+      .write.format("colf").option("manifest", "true").mode("append").save(dir)
+    Seq((1.5, "b")).toDF("k", "v").write.format("colf").mode("append").save(dir)
+    val before = dataFiles(dir)
+    assert(before.size == 2)
+    // SQL ALTER loads the table first, and that load's mergeSchema read
+    // fails on the conflict before adoption; the catalog call adopts
+    // without a load
+    val cat = new ColfCatalog()
+    cat.initialize("colf_ddl", org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+    val err = intercept[IllegalArgumentException] {
+      cat.alterTable(org.apache.spark.sql.connector.catalog.Identifier.of(Array.empty, dir),
+        org.apache.spark.sql.connector.catalog.TableChange.addColumn(Array("score"),
+          org.apache.spark.sql.types.DoubleType))
+    }
+    val msg = err.getMessage
+    assert(msg.startsWith("colf: cannot adopt a declared schema for "), msg)
+    assert(msg.contains("column 'k' is ") && msg.contains("int32") && msg.contains("float64"), msg)
+    before.keys.foreach(n => assert(msg.contains(n), msg))
+    assert(dataFiles(dir) == before)
+  }
+
   test("ALTER on an unversioned table fails with enable_versioning guidance") {
     val dir = tmp() + "/t"
     Seq((1, "a")).toDF("k", "v").write.format("colf").mode("append").save(dir)

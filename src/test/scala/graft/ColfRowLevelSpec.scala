@@ -384,4 +384,28 @@ class ColfRowLevelSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getDouble(1))).toSet
     assert(got == Set((1, 11.0), (4, 44.0)))
   }
+
+  test("copy-on-write rewrite scan stays packed: UPDATE of 8 tiny files writes one file") {
+    // read scans spread over the session's cores, but a rewrite scan's
+    // partitions become its output files — spreading it would turn 8
+    // tiny files into 4 rewritten ones instead of 1
+    registerCatalog()
+    val dir = tmp()
+    spark.range(800).select($"id".cast("int").as("k"), ($"id" * 0.5).as("v"))
+      .coalesce(1)
+      .write.format("colf").option("maxRowsPerFile", "100").mode("append").save(dir)
+    val before = colfFiles(dir)
+    assert(before.size == 8)
+    spark.conf.set("spark.sql.files.minPartitionNum", "4")
+    try {
+      assert(spark.read.format("colf").load(dir).rdd.getNumPartitions == 4)
+      spark.sql(s"UPDATE colf_rl.`$dir` SET v = -v WHERE k % 100 = 0")
+    } finally spark.conf.unset("spark.sql.files.minPartitionNum")
+    val after = colfFiles(dir)
+    assert(after.keySet.intersect(before.keySet).isEmpty, "every file holds a matched row")
+    assert(after.size == 1, s"expected one rewritten file, got ${after.size}")
+    val t = spark.read.format("colf").load(dir)
+    assert(t.count() == 800)
+    assert(t.where($"v" < 0).count() == 7) // k = 0 stays 0.0
+  }
 }

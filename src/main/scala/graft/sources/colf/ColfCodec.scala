@@ -3,11 +3,15 @@ package graft.sources.colf
 import java.io.{DataInputStream, EOFException, InputStream, OutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
+import java.util.stream.IntStream
 import java.util.zip.{Deflater, Inflater}
 
 import scala.collection.immutable.ArraySeq
 
-/** Byte-level COLF codec — no Spark dependencies, unit-testable in isolation.
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
+
+/** Byte-level COLF codec — no Spark session needed, unit-testable in isolation.
   *
   * On-disk layout (normative: reference SPEC.md; mirrored at
   * writer.py:174-210 / reader.py:44-91):
@@ -102,15 +106,19 @@ object ColfCodec {
   val StringStatMaxBytes = 64
 
   /** Unsigned lexicographic byte compare (UTF8String binary order). */
-  private[colf] def cmpBytes(a: Array[Byte], aOff: Int, aLen: Int, b: Array[Byte]): Int = {
-    val n = math.min(aLen, b.length)
+  private[colf] def cmpBytes(a: Array[Byte], aOff: Int, aLen: Int, b: Array[Byte]): Int =
+    cmpBytes(a, aOff, aLen, b, 0, b.length)
+
+  private[colf] def cmpBytes(a: Array[Byte], aOff: Int, aLen: Int,
+      b: Array[Byte], bOff: Int, bLen: Int): Int = {
+    val n = math.min(aLen, bLen)
     var i = 0
     while (i < n) {
-      val d = (a(aOff + i) & 0xff) - (b(i) & 0xff)
+      val d = (a(aOff + i) & 0xff) - (b(bOff + i) & 0xff)
       if (d != 0) return d
       i += 1
     }
-    aLen - b.length
+    aLen - bLen
   }
 
   /** Longest prefix of `b` that is ≤ `maxLen` bytes AND ends on a UTF-8
@@ -124,7 +132,16 @@ object ColfCodec {
     java.util.Arrays.copyOf(b, cut)
   }
 
-  /** Accumulates one column's values; produces the uncompressed payload. */
+  /** One column's header stats and zlib block, ready for [[writeFile]]. */
+  private[colf] final case class FinishedColumn(stats: ColfColStats, block: Array[Byte],
+      uncompSize: Int, hasNulls: Boolean)
+
+  /** Accumulates one column's values. `append` only buffers a value and
+    * its null bit; everything derived from the values — min/max, null
+    * count, bloom, payload and its zlib block — is computed once, by
+    * [[finish]], which touches nothing but this builder, so the columns
+    * of one file can finish concurrently.
+    */
   sealed trait ColumnBuilder {
     protected var n = 0
     protected var nullCount = 0
@@ -132,16 +149,26 @@ object ColfCodec {
     def count: Int = n
     def hasNulls: Boolean = nullCount > 0
     def nullCnt: Long = nullCount.toLong
-    /** (min, max) over the non-null values appended so far, for the header
-      * stats (data skipping). Either side may be None — see the per-builder
+    /** (min, max) over the buffered non-null values, for the header stats
+      * (data skipping). Either side may be None — see the per-builder
       * rules ([[StringStatMaxBytes]]; NaN/Inf doubles drop both bounds).
       */
     def statsMinMax: (Option[Any], Option[Any])
+    /** Bloom hash of the non-null value at row `i` ([[ColfBloom]]). */
+    protected def hashAt(i: Int): Long
     /** Equality-skipping Bloom filter over this column's distinct values
-      * (all three types), None when the per-file distinct count exceeded
-      * [[ColfBloom.MaxDistinct]].
+      * (all three types), None when the column has no non-null value or
+      * more than [[ColfBloom.MaxDistinct]] distinct ones.
       */
-    def statsBloom: Option[ColfBloom] = None
+    def statsBloom: Option[ColfBloom] = {
+      val hs = new ColfBloom.DistinctHashes
+      var i = 0
+      while (i < n && !hs.overCap) {
+        if (!nulls(i)) hs.add(hashAt(i))
+        i += 1
+      }
+      ColfBloom.of(hs)
+    }
     protected def ensureNulls(): Unit =
       if (n >= nulls.length) nulls = java.util.Arrays.copyOf(nulls, nulls.length * 2)
     def appendNull(): Unit
@@ -153,6 +180,14 @@ object ColfCodec {
     def byteSize: Long
     /** Full payload: dtype byte, hasNulls byte, bitmap, data. */
     def payload(): Array[Byte]
+
+    /** Stats, bloom, payload and zlib block of the buffered column. */
+    private[colf] def finish(compressionLevel: Int): FinishedColumn = {
+      val (mn, mx) = statsMinMax
+      val pl = payload()
+      FinishedColumn(ColfColStats(nullCnt, mn, mx, statsBloom),
+        compress(pl, compressionLevel), pl.length, hasNulls)
+    }
 
     protected def bitmapBytes: Array[Byte] = {
       val bm = new Array[Byte]((n + 7) / 8)
@@ -176,31 +211,31 @@ object ColfCodec {
     override def tpe: ColfType = ColfType.Int32
     override def byteSize: Long = 4L * n
     private var values = new Array[Int](16)
-    private var mn = Int.MaxValue
-    private var mx = Int.MinValue
-    // Equality-bloom hashes (same cap/discipline as the utf8 builder):
-    // on an UNSORTED high-cardinality int key, min/max bounds span ~the
-    // whole range in every file, so `id = k` point lookups prune nothing
-    // without this.
-    private var valueHashes: java.util.HashSet[java.lang.Long] = new java.util.HashSet()
     override def statsMinMax: (Option[Any], Option[Any]) =
-      if (n == nullCount) (None, None) else (Some(mn), Some(mx))
-    override def statsBloom: Option[ColfBloom] =
-      if (valueHashes == null || valueHashes.isEmpty) None
-      else Some(ColfBloom.build(valueHashes))
+      if (n == nullCount) (None, None)
+      else {
+        var mn = Int.MaxValue
+        var mx = Int.MinValue
+        var i = 0
+        while (i < n) {
+          if (!nulls(i)) {
+            val v = values(i)
+            if (v < mn) mn = v
+            if (v > mx) mx = v
+          }
+          i += 1
+        }
+        (Some(mn), Some(mx))
+      }
+    // Equality blooms on ints too: on an UNSORTED high-cardinality int
+    // key, min/max bounds span ~the whole range in every file, so
+    // `id = k` point lookups prune nothing without one.
+    override protected def hashAt(i: Int): Long = ColfBloom.hashInt(values(i))
     private def ensure(): Unit = {
       ensureNulls()
       if (n >= values.length) values = java.util.Arrays.copyOf(values, values.length * 2)
     }
-    def append(v: Int): Unit = {
-      ensure(); values(n) = v; nulls(n) = false; n += 1
-      if (v < mn) mn = v
-      if (v > mx) mx = v
-      if (valueHashes != null) {
-        valueHashes.add(ColfBloom.hashInt(v))
-        if (valueHashes.size() > ColfBloom.MaxDistinct) valueHashes = null
-      }
-    }
+    def append(v: Int): Unit = { ensure(); values(n) = v; nulls(n) = false; n += 1 }
     override def appendNull(): Unit = { ensure(); values(n) = 0; nulls(n) = true; nullCount += 1; n += 1 }
     override def payload(): Array[Byte] = {
       val buf = ByteBuffer.allocate(headerLen + 4 * n).order(ByteOrder.LITTLE_ENDIAN)
@@ -215,41 +250,38 @@ object ColfCodec {
     override def tpe: ColfType = ColfType.Float64
     override def byteSize: Long = 8L * n
     private var values = new Array[Double](16)
-    private var mn = Double.PositiveInfinity
-    private var mx = Double.NegativeInfinity
-    private var nonFinite = false
-    // Equality-bloom hashes over NORMALIZED bit patterns (zeros unified,
-    // NaN canonical — ColfBloom.normDouble) so probe and stored value
-    // hash identically whenever SQL equality holds.
-    private var valueHashes: java.util.HashSet[java.lang.Long] = new java.util.HashSet()
     /** NaN is unordered (and Spark treats it as LARGER than any value in
       * predicates, unlike Java); ±Inf is not JSON-encodable — any
       * non-finite value drops both bounds rather than risk a wrong prune.
       */
-    override def statsMinMax: (Option[Any], Option[Any]) =
-      if (n == nullCount || nonFinite) (None, None) else (Some(mn), Some(mx))
-    override def statsBloom: Option[ColfBloom] =
-      if (valueHashes == null || valueHashes.isEmpty) None
-      else Some(ColfBloom.build(valueHashes))
+    override def statsMinMax: (Option[Any], Option[Any]) = {
+      var mn = Double.PositiveInfinity
+      var mx = Double.NegativeInfinity
+      var i = 0
+      while (i < n) {
+        if (!nulls(i)) {
+          val v = values(i)
+          if (!java.lang.Double.isFinite(v)) return (None, None)
+          // -0.0 == 0.0 under IEEE/SQL predicate equality but -0.0 < 0.0
+          // in total order; normalize to 0.0 for BOUNDS ONLY so a filter on
+          // either zero can never wrongly prune (stored data is untouched).
+          val sv = if (v == 0.0d) 0.0d else v
+          if (sv < mn) mn = sv
+          if (sv > mx) mx = sv
+        }
+        i += 1
+      }
+      if (n == nullCount) (None, None) else (Some(mn), Some(mx))
+    }
+    // Bloom hashes over NORMALIZED bit patterns (zeros unified, NaN
+    // canonical — ColfBloom.normDouble) so probe and stored value hash
+    // identically whenever SQL equality holds.
+    override protected def hashAt(i: Int): Long = ColfBloom.hashDouble(values(i))
     private def ensure(): Unit = {
       ensureNulls()
       if (n >= values.length) values = java.util.Arrays.copyOf(values, values.length * 2)
     }
-    def append(v: Double): Unit = {
-      ensure(); values(n) = v; nulls(n) = false; n += 1
-      if (java.lang.Double.isFinite(v)) {
-        // -0.0 == 0.0 under IEEE/SQL predicate equality but -0.0 < 0.0 in
-        // total order; normalize to 0.0 for BOUNDS ONLY so a filter on
-        // either zero can never wrongly prune (stored data is untouched).
-        val sv = if (v == 0.0d) 0.0d else v
-        if (sv < mn) mn = sv
-        if (sv > mx) mx = sv
-      } else nonFinite = true
-      if (valueHashes != null) {
-        valueHashes.add(ColfBloom.hashDouble(v))
-        if (valueHashes.size() > ColfBloom.MaxDistinct) valueHashes = null
-      }
-    }
+    def append(v: Double): Unit = { ensure(); values(n) = v; nulls(n) = false; n += 1 }
     override def appendNull(): Unit = { ensure(); values(n) = 0.0; nulls(n) = true; nullCount += 1; n += 1 }
     override def payload(): Array[Byte] = {
       val buf = ByteBuffer.allocate(headerLen + 8 * n).order(ByteOrder.LITTLE_ENDIAN)
@@ -262,23 +294,34 @@ object ColfCodec {
 
   final class StringColumnBuilder extends ColumnBuilder {
     override def tpe: ColfType = ColfType.Utf8
-    override def byteSize: Long = 4L * n + blob.size()
+    override def byteSize: Long = 4L * n + blobLen
     private var starts = new Array[Int](16)
-    private val blob = new java.io.ByteArrayOutputStream(1024)
-    private var mnB: Array[Byte] = null
-    private var mxB: Array[Byte] = null
-    // Distinct value hashes for the equality bloom; null once the distinct
-    // count passes the cap (the bloom is then dropped — stats stay sound,
-    // equality skipping just doesn't apply to this file).
-    private var valueHashes: java.util.HashSet[java.lang.Long] = new java.util.HashSet()
+    private var blob = new Array[Byte](1024)
+    private var blobLen = 0
+    // Row i's bytes end where row i+1 starts: a null row records the
+    // current position and adds no bytes (see class doc).
+    private def end(i: Int): Int = if (i + 1 < n) starts(i + 1) else blobLen
     /** Bounds compare as UNSIGNED BYTES — the same binary order Spark's
       * UTF8String uses for string predicates, so pruning decisions agree
       * with the engine even where UTF-16 `String.compareTo` would not
       * (supplementary-plane characters).
       */
     override def statsMinMax: (Option[Any], Option[Any]) = {
-      if (mnB == null) (None, None)
+      def cmp(i: Int, j: Int): Int =
+        cmpBytes(blob, starts(i), end(i) - starts(i), blob, starts(j), end(j) - starts(j))
+      var mnI = -1
+      var mxI = -1
+      var i = 0
+      while (i < n) {
+        if (!nulls(i)) {
+          if (mnI < 0 || cmp(i, mnI) < 0) mnI = i
+          if (mxI < 0 || cmp(i, mxI) > 0) mxI = i
+        }
+        i += 1
+      }
+      if (mnI < 0) (None, None)
       else {
+        def bytes(i: Int): Array[Byte] = java.util.Arrays.copyOfRange(blob, starts(i), end(i))
         // Bounds survive a bytes → String → JSON → String → bytes round
         // trip only for valid UTF-8; invalid sequences (reachable via
         // CAST(binary AS STRING)) decode lossily to U+FFFD, which can
@@ -288,52 +331,62 @@ object ColfCodec {
           val s = new String(b, StandardCharsets.UTF_8)
           if (java.util.Arrays.equals(s.getBytes(StandardCharsets.UTF_8), b)) Some(s) else None
         }
-        val mn = exact(utf8Prefix(mnB, StringStatMaxBytes))
-        val mx = if (mxB.length <= StringStatMaxBytes) exact(mxB) else None
+        val mn = exact(utf8Prefix(bytes(mnI), StringStatMaxBytes))
+        val mx = if (end(mxI) - starts(mxI) <= StringStatMaxBytes) exact(bytes(mxI)) else None
         (mn, mx)
       }
     }
+    // Bloom hashes over the raw UTF-8 bytes.
+    override protected def hashAt(i: Int): Long =
+      ColfBloom.hash(blob, starts(i), end(i) - starts(i))
     private def ensure(): Unit = {
       ensureNulls()
       if (n >= starts.length) starts = java.util.Arrays.copyOf(starts, starts.length * 2)
     }
+    /** Room for `len` more blob bytes; returns where they go. */
+    private def reserve(len: Int): Int = {
+      val need = blobLen.toLong + len
+      if (need > MaxBlobBytes)
+        throw new IllegalStateException(
+          "utf8 column blob exceeds the 2 GiB array limit (per column per file)")
+      if (need > blob.length)
+        blob = java.util.Arrays.copyOf(blob, math.min(MaxBlobBytes, math.max(need, 2L * blob.length)).toInt)
+      val at = blobLen
+      blobLen = need.toInt
+      at
+    }
+    private def appended(at: Int): Unit = { ensure(); starts(n) = at; nulls(n) = false; n += 1 }
     /** v must be UTF-8 bytes. */
     def append(v: Array[Byte]): Unit = append(v, 0, v.length)
     def append(v: Array[Byte], off: Int, len: Int): Unit = {
-      ensure()
-      starts(n) = blob.size()
-      nulls(n) = false
-      blob.write(v, off, len)
-      if (blob.size() < 0)
-        throw new IllegalStateException(
-          "utf8 column blob exceeds u32 offset range (4 GiB per column per file)")
-      n += 1
-      if (mnB == null || cmpBytes(v, off, len, mnB) < 0)
-        mnB = java.util.Arrays.copyOfRange(v, off, off + len)
-      if (mxB == null || cmpBytes(v, off, len, mxB) > 0)
-        mxB = java.util.Arrays.copyOfRange(v, off, off + len)
-      if (valueHashes != null) {
-        valueHashes.add(ColfBloom.hash(v, off, len))
-        if (valueHashes.size() > ColfBloom.MaxDistinct) valueHashes = null
-      }
+      val at = reserve(len)
+      System.arraycopy(v, off, blob, at, len)
+      appended(at)
     }
     def append(s: String): Unit = append(s.getBytes(StandardCharsets.UTF_8))
-    override def statsBloom: Option[ColfBloom] =
-      if (valueHashes == null || valueHashes.isEmpty) None
-      else Some(ColfBloom.build(valueHashes))
+    /** Copies straight from the string's backing memory (an `UnsafeRow`'s
+      * buffer, say) into the blob: no intermediate byte array.
+      */
+    def append(s: UTF8String): Unit = {
+      val at = reserve(s.numBytes)
+      s.writeToMemory(blob, Platform.BYTE_ARRAY_OFFSET + at)
+      appended(at)
+    }
     // Null rows record the current cumulative position (see class doc).
-    override def appendNull(): Unit = { ensure(); starts(n) = blob.size(); nulls(n) = true; nullCount += 1; n += 1 }
+    override def appendNull(): Unit = { ensure(); starts(n) = blobLen; nulls(n) = true; nullCount += 1; n += 1 }
     override def payload(): Array[Byte] = {
-      val blobBytes = blob.toByteArray
-      val buf = ByteBuffer.allocate(headerLen + 4 * n + blobBytes.length)
+      val buf = ByteBuffer.allocate(headerLen + 4 * n + blobLen)
         .order(ByteOrder.LITTLE_ENDIAN)
       header(buf)
       var i = 0
       while (i < n) { buf.putInt(starts(i)); i += 1 }
-      buf.put(blobBytes)
+      buf.put(blob, 0, blobLen)
       buf.array()
     }
   }
+
+  /** Largest blob a JVM byte array can hold. */
+  private val MaxBlobBytes = Int.MaxValue - 8
 
   def builderFor(tpe: ColfType): ColumnBuilder = tpe match {
     case ColfType.Int32   => new IntColumnBuilder
@@ -472,22 +525,38 @@ object ColfCodec {
 
   // ------------------------------------------------------------ file I/O
 
+  /** Convenience: encode + compress + write from builders. */
+  def writeFile(out: OutputStream, fields: IndexedSeq[ColfField],
+      builders: IndexedSeq[ColumnBuilder]): ColfSchema =
+    writeFile(out, fields, builders, DefaultCompressionLevel)
+
   /** Write a complete .colf file: header with absolute offsets first, then
-    * the compressed blocks (reference layout, writer.py:174-210). The
-    * caller supplies already-compressed blocks because offsets must be
-    * known before any data is written.
+    * the compressed blocks (reference layout, writer.py:174-210), so every
+    * block is compressed before anything is written. Each builder's
+    * [[ColumnBuilder.finish]] (stats, bloom, payload, zlib block) runs
+    * concurrently on the JDK common `ForkJoinPool`, into its own slot; the
+    * header and the blocks are then written in column order, so the bytes
+    * are those of a one-column-at-a-time write. Returns the schema written
+    * into the header, stats and blooms included.
     */
-  def writeFile(
-      out: OutputStream,
-      schema: ColfSchema,
-      compressed: IndexedSeq[Array[Byte]],
-      uncompSizes: IndexedSeq[Int],
-      hasNulls: IndexedSeq[Boolean]): Unit = {
-    require(compressed.length == schema.fields.length)
+  def writeFile(out: OutputStream, fields: IndexedSeq[ColfField],
+      builders: IndexedSeq[ColumnBuilder], compressionLevel: Int): ColfSchema = {
+    require(fields.length == builders.length)
+    val numRows = if (builders.isEmpty) 0 else builders.head.count
+    builders.foreach(b => require(b.count == numRows, "ragged columns"))
+    val ncols = builders.length
+    val cols = new Array[FinishedColumn](ncols)
+    IntStream.range(0, ncols).parallel()
+      .forEach(i => cols(i) = builders(i).finish(compressionLevel))
+    // Per-column stats ride in the header JSON (extra keys the reference
+    // reader ignores) — the read side prunes whole files against them.
+    // nullable in the schema reflects observed nulls (like the reference's
+    // inference, writer.py:44-50) OR the declared nullability, whichever
+    // is set — callers pass fields with the intended nullable flag.
+    val schema = ColfSchema(numRows.toLong, fields,
+      fields.lazyZip(cols).map((f, c) => f.name -> c.stats).toMap)
     val schemaJson = schema.toJson.getBytes(StandardCharsets.UTF_8)
-    val ncols = schema.fields.length
     val headerSize = 4 + schemaJson.length + MetaEntryLen * ncols
-    val dataStart = PreambleLen.toLong + headerSize
 
     val head = ByteBuffer.allocate(PreambleLen + headerSize).order(ByteOrder.LITTLE_ENDIAN)
     head.put(Magic)
@@ -496,45 +565,18 @@ object ColfCodec {
     head.putInt(headerSize)
     head.putInt(schemaJson.length)
     head.put(schemaJson)
-    var off = dataStart
-    var i = 0
-    while (i < ncols) {
+    var off = PreambleLen.toLong + headerSize
+    cols.foreach { c =>
       head.putLong(off)
-      head.putLong(compressed(i).length.toLong)
-      head.putLong(uncompSizes(i).toLong)
-      head.put(if (hasNulls(i)) 1.toByte else 0.toByte)
-      off += compressed(i).length
-      i += 1
+      head.putLong(c.block.length.toLong)
+      head.putLong(c.uncompSize.toLong)
+      head.put(if (c.hasNulls) 1.toByte else 0.toByte)
+      off += c.block.length
     }
     out.write(head.array())
-    i = 0
-    while (i < ncols) { out.write(compressed(i)); i += 1 }
+    cols.foreach(c => out.write(c.block))
     out.flush()
-  }
-
-  /** Convenience: encode + compress + write from builders. */
-  def writeFile(out: OutputStream, fields: IndexedSeq[ColfField],
-      builders: IndexedSeq[ColumnBuilder]): Unit =
-    writeFile(out, fields, builders, DefaultCompressionLevel)
-
-  def writeFile(out: OutputStream, fields: IndexedSeq[ColfField],
-      builders: IndexedSeq[ColumnBuilder], compressionLevel: Int): Unit = {
-    require(fields.length == builders.length)
-    val numRows = if (builders.isEmpty) 0 else builders.head.count
-    builders.foreach(b => require(b.count == numRows, "ragged columns"))
-    val payloads = builders.map(_.payload())
-    val comp = payloads.map(pl => compress(pl, compressionLevel))
-    // Per-column stats ride in the header JSON (extra keys the reference
-    // reader ignores) — the read side prunes whole files against them.
-    val stats = fields.lazyZip(builders).map { (f, b) =>
-      val (mn, mx) = b.statsMinMax
-      f.name -> ColfColStats(b.nullCnt, mn, mx, b.statsBloom)
-    }.toMap
-    // nullable in the schema reflects observed nulls (like the reference's
-    // inference, writer.py:44-50) OR the declared nullability, whichever
-    // is set — callers pass fields with the intended nullable flag.
-    writeFile(out, ColfSchema(numRows.toLong, fields, stats),
-      comp, payloads.map(_.length), builders.map(_.hasNulls))
+    schema
   }
 
   private def readFully(in: InputStream, len: Int): Array[Byte] = {

@@ -1,7 +1,7 @@
 package graft.sources.colf
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 
 /** Directory maintenance for colf tables. The streaming sink emits one
   * part file per epoch per partition — exactly the small-file accretion
@@ -109,6 +109,13 @@ object ColfMaintenance {
     // rooted at `dir`, the previous behavior exactly.
     val partCols = ColfPartitions.partitionCols(before)
     val groups = before.groupBy(r => new Path(r.path).getParent.toString)
+    // The rewrite reads through a session copy whose scans stay packed
+    // (minPartitionNum = 1), as a copy-on-write rewrite scan does: the
+    // read's partitions are concatenated into the output files, so a scan
+    // spread over the cores would make a compacted file's row order, and
+    // its bytes, depend on the session's core count.
+    val packed = GraftSqlBridge.cloneSession(spark)
+    packed.conf.set("spark.sql.files.minPartitionNum", "1")
     def writeGroups(skipManifest: Boolean): Unit = groups.foreach {
       case (parent, refs) =>
         val bytes = refs.map(_.size).sum
@@ -125,12 +132,12 @@ object ColfMaintenance {
             // partition columns it surfaces are dropped again because the
             // write target IS the partition directory
             import org.apache.spark.sql.functions.col
-            val full = spark.read.format("colf")
+            val full = packed.read.format("colf")
               .option("versionAsOf", v).option("mergeSchema", "true").load(dir)
               .where(col(ColfUtil.FileMetaCol).isin(refs.map(_.path): _*))
             if (partCols.isEmpty) full else full.drop(partCols: _*)
           case None =>
-            spark.read.format("colf").option("mergeSchema", "true")
+            packed.read.format("colf").option("mergeSchema", "true")
               .load(refs.map(_.path): _*)
         }
         val w0 =

@@ -123,13 +123,60 @@ object ColfBloom {
   def normDouble(v: Double): Double =
     if (v == 0.0d) 0.0d else if (java.lang.Double.isNaN(v)) Double.NaN else v
 
-  def build(hashes: java.util.Set[java.lang.Long]): ColfBloom = {
-    val nbits = math.max(512L, hashes.size().toLong * BitsPerKey)
+  /** The distinct hashes of one column's values: a primitive
+    * open-addressing `long` set (no boxing per value) that stops growing
+    * once it holds more than [[MaxDistinct]] hashes — past the cap the
+    * column gets no bloom ([[of]]). An empty slot holds 0L, so a 0L hash
+    * is kept in a flag of its own.
+    */
+  final class DistinctHashes {
+    private var slots = new Array[Long](64)
+    private var used = 0 // non-zero hashes in `slots`
+    private var hasZero = false
+    def size: Int = used + (if (hasZero) 1 else 0)
+    def overCap: Boolean = size > MaxDistinct
+
+    def add(h: Long): Unit =
+      if (h == 0L) hasZero = true
+      else if (!overCap && insert(slots, h)) {
+        used += 1
+        if (2 * used > slots.length) {
+          val old = slots
+          slots = new Array[Long](old.length * 2)
+          old.foreach(o => if (o != 0L) insert(slots, o))
+        }
+      }
+
+    /** Linear probing from a Fibonacci-hashed slot; false if present. */
+    private def insert(tab: Array[Long], h: Long): Boolean = {
+      val mask = tab.length - 1
+      var i = ((h * 0x9E3779B97F4A7C15L) >>> 32).toInt & mask
+      while (tab(i) != 0L) {
+        if (tab(i) == h) return false
+        i = (i + 1) & mask
+      }
+      tab(i) = h
+      true
+    }
+
+    def foreach(f: Long => Unit): Unit = {
+      if (hasZero) f(0L)
+      slots.foreach(h => if (h != 0L) f(h))
+    }
+  }
+
+  /** The bloom over `hashes`, or None when there are none or too many. */
+  def of(hashes: DistinctHashes): Option[ColfBloom] =
+    if (hashes.size == 0 || hashes.overCap) None else Some(build(hashes))
+
+  /** The bits are an OR over the hashes, so they do not depend on the
+    * order the hashes were added in.
+    */
+  def build(hashes: DistinctHashes): ColfBloom = {
+    val nbits = math.max(512L, hashes.size.toLong * BitsPerKey)
     val bits = new Array[Long](((nbits + 63) / 64).toInt)
     val m = bits.length.toLong * 64L
-    val it = hashes.iterator()
-    while (it.hasNext) {
-      val h = it.next().longValue()
+    hashes.foreach { h =>
       val h1 = h.toInt
       val h2 = (h >>> 32).toInt
       var i = 0

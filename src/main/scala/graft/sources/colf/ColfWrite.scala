@@ -647,8 +647,7 @@ class ColfDataWriter(
       else builders(c) match {
         case b: ColfCodec.IntColumnBuilder    => b.append(record.getInt(p))
         case b: ColfCodec.DoubleColumnBuilder => b.append(record.getDouble(p))
-        case b: ColfCodec.StringColumnBuilder =>
-          b.append(record.getUTF8String(p).getBytes)
+        case b: ColfCodec.StringColumnBuilder => b.append(record.getUTF8String(p))
       }
       c += 1
     }
@@ -670,17 +669,14 @@ class ColfDataWriter(
     fileSeq += 1
     val fs = tmp.getFileSystem(conf.value)
     val out = fs.create(tmp, false) // fail loudly on collision; creates parent dirs
-    try ColfCodec.writeFile(out, fields, builders, compressionLevel)
-    finally out.close()
-    // capture the file's facts from the SAME builders that produced its
-    // header — identical row count and bounds, zero re-reads — so the
-    // commit can record them in the manifest (blooms stay header-only)
-    val facts = ColfFileFacts(
-      if (builders.isEmpty) 0L else builders.head.count.toLong,
-      fields.lazyZip(builders).map { (f, b) =>
-        val (mn, mx) = b.statsMinMax
-        f.name -> ColfColStats(b.nullCnt, mn, mx)
-      }.toMap)
+    val header =
+      try ColfCodec.writeFile(out, fields, builders, compressionLevel)
+      finally out.close()
+    // the file's facts are the header it wrote — identical row count and
+    // bounds, zero re-reads — so the commit can record them in the
+    // manifest (blooms stay header-only)
+    val facts = ColfFileFacts(header.numRows,
+      header.stats.map { case (name, st) => name -> st.copy(bloom = None) })
     written ::= (tmp, fin, facts)
   }
 
